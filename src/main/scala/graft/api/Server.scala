@@ -3,7 +3,7 @@ package graft.api
 import java.io.OutputStream
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.{Callable, ConcurrentLinkedQueue, ExecutionException, Executors}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,7 +26,12 @@ import org.apache.spark.sql.functions._
   * Design: every response body is rendered ENGINE-SIDE — each route builds
   * a LIMIT-capped DataFrame view on [[WaddleStore]] and serializes it with
   * `Json.responseBody` (codegen'd `to_json`, canonical sorted keys); the
-  * driver only concatenates the capped rows. The JDK's built-in
+  * driver only concatenates the capped rows. The composite routes (run
+  * detail, compare) render their independent sections concurrently on
+  * the handler pool, so a route waits for its slowest section rather than
+  * the sum of them: at dashboard scale each section is a few small files
+  * and its cost is the fixed per-action overhead (analysis, planning, job
+  * scheduling), which overlaps. The JDK's built-in
   * `com.sun.net.httpserver` serves them — zero added dependencies.
   *
   * The client at `/` is an ORIGINAL single-file page (resource
@@ -47,10 +52,13 @@ final class DashboardServer(spark: SparkSession, root: String, port: Int = 0) {
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // SSE holds exchanges open indefinitely; a cached pool keeps long-lived
   // event streams from starving the JSON routes (the default executor runs
-  // every handler on one dispatcher thread)
-  server.setExecutor(Executors.newCachedThreadPool { r =>
+  // every handler on one dispatcher thread). The composite routes render
+  // their sections on the same pool — unbounded, so a handler waiting on
+  // its sections can never starve them of a thread
+  private[graft] val handlers = Executors.newCachedThreadPool { r =>
     val t = new Thread(r, "graft-dashboard"); t.setDaemon(true); t
-  })
+  }
+  server.setExecutor(handlers)
   private val sseClients = new ConcurrentLinkedQueue[OutputStream]()
   // keepalive: a periodic SSE comment frame so idle proxies don't reap the
   // stream, and — since the write failing is the only disconnect signal —
@@ -78,6 +86,7 @@ final class DashboardServer(spark: SparkSession, root: String, port: Int = 0) {
     sseClients.forEach(os => try os.close() catch { case _: Exception => () })
     sseClients.clear()
     server.stop(0)
+    handlers.shutdown()
   }
 
   // ---- live push --------------------------------------------------------
@@ -93,11 +102,13 @@ final class DashboardServer(spark: SparkSession, root: String, port: Int = 0) {
     */
   def publish(json: String): Unit = writeAll(s"data: $json\n\n")
 
+  // writes hold the stream's lock: publish, the keepalive and the
+  // subscribe hello run on different threads and must not interleave bytes
   private def writeAll(frame: String): Unit = {
     val it = sseClients.iterator()
     while (it.hasNext) {
       val os = it.next()
-      try { os.write(frame.getBytes(UTF_8)); os.flush() }
+      try os.synchronized { os.write(frame.getBytes(UTF_8)); os.flush() }
       catch { case _: Exception => it.remove() }
     }
   }
@@ -258,10 +269,15 @@ final class DashboardServer(spark: SparkSession, root: String, port: Int = 0) {
     ex.getResponseHeaders.set("Cache-Control", "no-cache")
     ex.sendResponseHeaders(200, 0L) // length 0 = chunked, stream stays open
     val os = ex.getResponseBody
-    os.write(": connected\n\n".getBytes(UTF_8)) // SSE comment = hello/keepalive
-    os.flush()
-    sseClients.add(os)
-    ()
+    // register BEFORE the hello, under the stream's lock: a client that has
+    // read the hello is already subscribed, so a publish sent right after it
+    // connects reaches it, and a publish that finds the stream first waits
+    // until the hello is out
+    os.synchronized {
+      sseClients.add(os)
+      os.write(": connected\n\n".getBytes(UTF_8)) // SSE comment = hello/keepalive
+      os.flush()
+    }
   }
 
   private def listRuns(ex: HttpExchange): Unit = {
@@ -277,22 +293,36 @@ final class DashboardServer(spark: SparkSession, root: String, port: Int = 0) {
     respond(ex, 200, Json.responseBody(df))
   }
 
+  /** Build and render independent response sections concurrently on the
+    * handler pool, one `Json.responseBody` action each, results in
+    * argument order. A failing section rethrows its own cause, so
+    * [[handle]] answers with the status code it would have given the
+    * serial render (a 400 stays a 400).
+    */
+  private def renderAll(views: (() => DataFrame)*): Seq[String] = {
+    val pending = views.map(v =>
+      handlers.submit((() => Json.responseBody(v())): Callable[String]))
+    try pending.map(_.get())
+    catch { case e: ExecutionException => throw e.getCause }
+  }
+
   /** Composite run detail (reference get_run,
     * /root/reference/waddle/_dashboard_api.py:74-130): each section is its
-    * own capped engine query; the driver only assembles the envelope.
+    * own capped engine query; sections render concurrently; the driver
+    * assembles the envelope. An unknown (or deleted) id renders an empty
+    * run section, which is the 404 — no separate existence probe.
     */
   private def getRun(ex: HttpExchange, id: String): Unit = {
-    val run = store.runs(nowSec()).where(col("id") === id)
-    if (run.isEmpty) { respond(ex, 404, """{"error":"not found"}"""); return }
-    val params = Json.responseBody(
-      store.latestKv("param").where(col("run_id") === id).orderBy("key"))
-    val tags = Json.responseBody(
-      store.latestKv("tag").where(col("run_id") === id).orderBy("key"))
-    val arts = Json.responseBody(store.artifacts(id).orderBy("name"))
-    val keys = Json.responseBody(
-      store.metrics(id).select("key").distinct().orderBy("key"))
-    respond(ex, 200,
-      s"""{"run":${Json.responseBody(run).stripPrefix("[").stripSuffix("]")},""" +
+    val now = nowSec()
+    val Seq(run, params, tags, arts, keys) = renderAll(
+      () => store.runs(now).where(col("id") === id),
+      () => store.latestKv("param").where(col("run_id") === id).orderBy("key"),
+      () => store.latestKv("tag").where(col("run_id") === id).orderBy("key"),
+      () => store.artifacts(id).orderBy("name"),
+      () => store.metrics(id).select("key").distinct().orderBy("key"))
+    if (run == "[]") respond(ex, 404, """{"error":"not found"}""")
+    else respond(ex, 200,
+      s"""{"run":${run.stripPrefix("[").stripSuffix("]")},""" +
         s""""params":$params,"tags":$tags,"artifacts":$arts,"metric_keys":$keys}""")
   }
 
@@ -308,10 +338,11 @@ final class DashboardServer(spark: SparkSession, root: String, port: Int = 0) {
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
     val ids = parseRunIds(body)
     if (ids.isEmpty) { respond(ex, 400, """{"error":"run_ids required"}"""); return }
-    val runs = Json.responseBody(
-      store.runs(nowSec()).where(col("id").isin(ids: _*)).orderBy("id"))
-    val params = Json.responseBody(store.compareParams(ids))
-    val summary = Json.responseBody(store.metricSummary(ids))
+    val now = nowSec()
+    val Seq(runs, params, summary) = renderAll(
+      () => store.runs(now).where(col("id").isin(ids: _*)).orderBy("id"),
+      () => store.compareParams(ids),
+      () => store.metricSummary(ids))
     respond(ex, 200, s"""{"runs":$runs,"params":$params,"summary":$summary}""")
   }
 }

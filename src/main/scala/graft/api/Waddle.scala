@@ -149,6 +149,16 @@ final class WaddleSession(spark: SparkSession, root: String, project: String = "
     * catalog write), so any bucketed catalog table a previous [[WaddleStore.compact]]
     * registered is dropped here — the zero-shuffle guarantee holds only for
     * a fully-compacted store and is re-established by the next compaction.
+    *
+    * One file per table (per `metric_date` partition for metrics) per
+    * flush: the buffers are driver-local, so `toDF()` plans a
+    * `LocalTableScan` that slices them into `min(rows, defaultParallelism)`
+    * partitions — 4 metrics files for a 320-row flush at `local[4]`, about
+    * one file per row on a cluster with hundreds of cores. Every reader,
+    * the live file-source stream and [[WaddleStore.compact]] then pay a
+    * file open per slice. A flush's rows are bounded by the flush cadence,
+    * not the cluster, so `coalesce(1)` (no shuffle) writes them as one
+    * task whatever the parallelism.
     */
   def flush(): Unit = synchronized {
     import spark.implicits._
@@ -166,13 +176,13 @@ final class WaddleSession(spark: SparkSession, root: String, project: String = "
       def append[T <: Product : org.apache.spark.sql.Encoder](
           rows: Seq[T], table: String): Unit =
         if (rows.nonEmpty)
-          rows.toDF().write.mode("append").parquet(s"$root/$table")
+          rows.toDF().coalesce(1).write.mode("append").parquet(s"$root/$table")
       append(runBuf.toSeq, "runs"); runBuf.clear()
       append(repoBuf.toSeq, "repos"); repoBuf.clear()
       append(commitBuf.toSeq, "commits"); commitBuf.clear()
       if (metricBuf.nonEmpty) {
         WaddleStore.dropMetricsCatalog(spark, root)
-        metricBuf.toSeq.toDF()
+        metricBuf.toSeq.toDF().coalesce(1)
           .withColumn("metric_date", to_date(from_unixtime(col("ts").cast("long"))))
           .write.mode("append").partitionBy("metric_date").parquet(s"$root/metrics")
         spark.catalog.refreshByPath(s"$root/metrics")
@@ -212,12 +222,22 @@ final class WaddleStore(spark: SparkSession, root: String) {
     * If the current dir is missing mid-compaction-crash (between the two
     * swap renames), the table is read from its `.compact-old` backup —
     * a read-only fallback; [[compact]]'s recovery restores it for real.
+    *
+    * A flush may drop the catalog table at any moment, so it is resolved
+    * directly rather than probed first (a `tableExists` check followed by
+    * `spark.table` let the drop land in between — an HTTP 500
+    * `TABLE_OR_VIEW_NOT_FOUND` on the dashboard), and its absence is the
+    * signal to read the directory; see [[compactedMetrics]] for the
+    * action-time half of the race.
     */
   private def tbl(name: String): DataFrame = {
-    if (name == "metrics" &&
-        spark.catalog.tableExists(WaddleStore.metricsTableName(root)))
-      return spark.table(WaddleStore.metricsTableName(root))
+    if (name == "metrics")
+      try return compactedMetrics()
         .select(schemas(name).fieldNames.map(col).toSeq: _*)
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "TABLE_OR_VIEW_NOT_FOUND" => ()
+      }
     // Hadoop-FS existence probe, not java.io.File: the store root may be
     // hdfs:// or s3a:// in the 100 TB deployment. The declared schema is
     // passed unconditionally — an existing-but-empty directory (e.g. the
@@ -237,6 +257,25 @@ final class WaddleStore(spark: SparkSession, root: String) {
           .parquet(path.toString)
       case None =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemas(name))
+    }
+  }
+
+  /** The bucketed table a completed [[compact]] registered, with its
+    * partition listing taken now. A catalog relation re-reads its
+    * partitions from the catalog when the query is planned, so a flush
+    * dropping the table between building a view and running it failed
+    * the read; with the listing pinned the frame no longer touches the
+    * catalog entry (the table is EXTERNAL — the files stay). Bucketing
+    * rides on the relation, so per-run reads stay shuffle-free.
+    */
+  private def compactedMetrics(): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{
+      CatalogFileIndex, HadoopFsRelation, LogicalRelation}
+    val df = spark.table(WaddleStore.metricsTableName(root))
+    df.queryExecution.analyzed.collectFirst { case lr: LogicalRelation => lr.relation } match {
+      case Some(r @ HadoopFsRelation(idx: CatalogFileIndex, _, _, _, _, _)) =>
+        spark.baseRelationToDataFrame(r.copy(location = idx.filterPartitions(Nil))(spark))
+      case _ => df
     }
   }
 
@@ -778,11 +817,13 @@ object WaddleStore {
     s"waddle_metrics_${Integer.toHexString(root.hashCode)}"
 
   /** Appends void the bucket guarantee: drop the catalog entry (EXTERNAL —
-    * the files stay) so reads fall back to the plain directory scan.
+    * the files stay) so reads fall back to the plain directory scan. The
+    * probe skips the command when there is nothing to drop; `IF EXISTS`
+    * keeps a concurrent drop from failing this one.
     */
   private[graft] def dropMetricsCatalog(spark: SparkSession, root: String): Unit =
     if (spark.catalog.tableExists(metricsTableName(root)))
-      spark.sql(s"DROP TABLE ${metricsTableName(root)}")
+      spark.sql(s"DROP TABLE IF EXISTS ${metricsTableName(root)}")
 }
 
 object WaddleSchema {

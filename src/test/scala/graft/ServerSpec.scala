@@ -4,7 +4,13 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
-import graft.api.{DashboardServer, WaddleSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.api.{DashboardServer, Json, WaddleSession, WaddleStore}
 
 /** End-to-end dashboard API test: start the HTTP server on an ephemeral
   * port, populate a store through the write façade, and drive the same
@@ -87,6 +93,128 @@ class ServerSpec extends SparkSpec {
       assert(get(port, s"/api/runs/$r1").statusCode() == 404)
       assert(get(port, s"/api/runs/$r1/metrics").body() == "[]")
       assert(get(port, "/api/metric-summary?key=loss").body().contains(""""value":0.9"""))
+    } finally srv.stop()
+  }
+
+  /** A finished two-run store: params, a tag, an artifact and two metric
+    * keys on the first run. */
+  private def twoRunStore(prefix: String): (String, String, String) = {
+    val root = Files.createTempDirectory(prefix).toString
+    val sess = new WaddleSession(spark, root, project = "conc")
+    val r1 = sess.initRun("alpha", Map("lr" -> "0.1", "bs" -> "32"))
+    sess.log(r1, Map("loss" -> 1.0, "acc" -> 0.5)); sess.log(r1, Map("loss" -> 0.25, "acc" -> 0.75))
+    sess.logTag(r1, "model", "cnn")
+    sess.logArtifact(r1, "w.bin", "weights".getBytes)
+    sess.finishRun(r1, "completed")
+    val r2 = sess.initRun("beta", Map("lr" -> "0.2"))
+    sess.log(r2, Map("loss" -> 0.9))
+    sess.finishRun(r2, "failed")
+    (root, r1, r2)
+  }
+
+  test("run detail and compare bodies equal the serial renders of their views, under concurrent GETs") {
+    val (root, r1, r2) = twoRunStore("waddle-conc")
+    val store = new WaddleStore(spark, root)
+    // finished runs: the staleness clock cannot change their rows
+    val now = System.currentTimeMillis() / 1000.0
+    def body(df: DataFrame) = Json.responseBody(df)
+    val wantDetail =
+      s"""{"run":${body(store.runs(now).where(col("id") === r1)).stripPrefix("[").stripSuffix("]")},""" +
+        s""""params":${body(store.latestKv("param").where(col("run_id") === r1).orderBy("key"))},""" +
+        s""""tags":${body(store.latestKv("tag").where(col("run_id") === r1).orderBy("key"))},""" +
+        s""""artifacts":${body(store.artifacts(r1).orderBy("name"))},""" +
+        s""""metric_keys":${body(store.metrics(r1).select("key").distinct().orderBy("key"))}}"""
+    val ids = Seq(r1, r2)
+    val wantCompare =
+      s"""{"runs":${body(store.runs(now).where(col("id").isin(ids: _*)).orderBy("id"))},""" +
+        s""""params":${body(store.compareParams(ids))},""" +
+        s""""summary":${body(store.metricSummary(ids))}}"""
+
+    val srv = new DashboardServer(spark, root, port = 0)
+    srv.start()
+    val clients = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val port = srv.boundPort
+      assert(get(port, s"/api/runs/$r1").body() == wantDetail)
+      assert(send(port, "/api/compare", "POST", s"""{"run_ids": ["$r1", "$r2"]}""").body() ==
+        wantCompare)
+      val calls = java.util.Collections.nCopies(8,
+        (() => get(port, s"/api/runs/$r1")): java.util.concurrent.Callable[HttpResponse[String]])
+      val replies = clients.invokeAll(calls).toArray.toSeq
+        .map(_.asInstanceOf[java.util.concurrent.Future[HttpResponse[String]]].get())
+      assert(replies.forall(_.statusCode() == 200))
+      assert(replies.map(_.body()).distinct == Seq(wantDetail))
+    } finally { clients.shutdown(); srv.stop() }
+  }
+
+  test("run detail is five SQL actions, an unknown id still 404s, and stop() shuts the handler pool") {
+    val (root, r1, _) = twoRunStore("waddle-acts")
+    // actions that read this store only: other suites' leftovers never count
+    def readsStore(qe: QueryExecution): Boolean = qe.analyzed.collectLeaves().exists {
+      case lr: LogicalRelation => lr.relation match {
+        case r: HadoopFsRelation => r.location.rootPaths.exists(_.toString.contains(root))
+        case _ => false
+      }
+      case _ => false
+    }
+    val actions = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (readsStore(qe)) actions.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        if (readsStore(qe)) actions.incrementAndGet()
+    }
+    val srv = new DashboardServer(spark, root, port = 0)
+    srv.start()
+    try {
+      val port = srv.boundPort
+      assert(get(port, "/api/runs/doesnotexist").statusCode() == 404)
+      spark.listenerManager.register(listener)
+      try {
+        assert(get(port, s"/api/runs/$r1").statusCode() == 200)
+        // the listener bus is asynchronous: wait for the five, then give a
+        // sixth (the old separate existence probe) time to show up
+        val deadline = System.currentTimeMillis() + 10000
+        while (actions.get < 5 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+        Thread.sleep(500)
+        assert(actions.get == 5, s"run detail ran ${actions.get} SQL actions")
+      } finally spark.listenerManager.unregister(listener)
+    } finally srv.stop()
+    assert(srv.handlers.isShutdown, "stop() must shut the handler pool down")
+  }
+
+  test("flushes dropping the compacted catalog table never turn concurrent reads into 500s") {
+    val root = Files.createTempDirectory("waddle-race").toString
+    val sess = new WaddleSession(spark, root, project = "race")
+    val live = sess.initRun("live", Map("lr" -> "0.1"))
+    (0 until 5).foreach(i => sess.log(live, Map("loss" -> 1.0 / (i + 1))))
+    sess.flush()
+    new WaddleStore(spark, root).compact()
+    assert(spark.catalog.tableExists(WaddleStore.metricsTableName(root)))
+
+    val srv = new DashboardServer(spark, root, port = 0)
+    srv.start()
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val writer = new Thread(() => {
+      try (0 until 20).foreach { i => sess.log(live, Map("loss" -> 0.1 / (i + 1))); sess.flush() }
+      catch { case e: Throwable => failures.add(s"flush: $e") }
+      finally done.set(true)
+    })
+    try {
+      val port = srv.boundPort
+      writer.start()
+      var reads = 0
+      while (!done.get || reads == 0) {
+        for (path <- Seq("/api/runs", s"/api/runs/$live")) {
+          val r = get(port, path)
+          reads += 1
+          if (r.statusCode() != 200) failures.add(s"$path -> ${r.statusCode()}: ${r.body()}")
+        }
+      }
+      writer.join()
+      assert(failures.isEmpty, failures.toArray.mkString("\n"))
+      assert(!spark.catalog.tableExists(WaddleStore.metricsTableName(root)))
     } finally srv.stop()
   }
 

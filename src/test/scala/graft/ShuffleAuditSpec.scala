@@ -178,20 +178,36 @@ class ShuffleAuditSpec extends SparkSpec {
       assert(a.shuffleRecords > 0, s"$n audit saw no shuffle records")
       a.shuffleBytes.toDouble / a.shuffleRecords
     }
-    // embed: the keyed materialization exchange carries each 64-dim vector
-    // ONCE (the skew-free plan broadcasts the band self-join, so shuffle
-    // records are mostly the vector rows themselves — measured 215 KB /
-    // 1127 records ≈ 430 B/vec blended at sf0.001, the corpus payload
-    // ~1.5×). Two failure modes, two bounds: vectors riding PER CANDIDATE
-    // PAIR blows B/record past two vector rows (>1 KB); vectors riding the
-    // 2-band fan doubles total bytes while keeping B/record at one row —
-    // the absolute bound catches that.
-    assert(perRecord("q_dedup_embed") < 768.0,
-      s"q_dedup_embed moves ${perRecord("q_dedup_embed")} B/record — " +
-        "vector payloads must never ride the candidate pairs")
-    assert(audited("q_dedup_embed").shuffleBytes < 384 * 1024,
-      s"q_dedup_embed shuffled ${audited("q_dedup_embed").shuffleBytes} B — " +
-        "more than ~1.5× the corpus payload means vectors rode the band fan")
+    // embed: the steady-state query serves TakeOrdered off the
+    // session-cached, compacted pair artifact (one partition, so no
+    // exchange at all) — ZERO shuffle, like simhash pairs below; the pair
+    // search itself is gated on the build seam
+    assert(audited("q_dedup_embed").shuffleBytes == 0L,
+      s"q_dedup_embed steady state shuffled " +
+        s"${audited("q_dedup_embed").shuffleBytes} B — the artifact probe " +
+        "must not re-run the pair search")
+    // embed build seam: the keyed materialization exchange carries each
+    // 64-dim vector ONCE (the skew-free plan broadcasts the band self-join,
+    // so shuffle records are mostly the vector rows themselves — measured
+    // 215 KB / 1127 records ≈ 430 B/vec blended at sf0.001, the corpus
+    // payload ~1.5×). Two failure modes, two bounds: vectors riding PER
+    // CANDIDATE PAIR blows B/record past two vector rows (>1 KB); vectors
+    // riding the 2-band fan doubles total bytes while keeping B/record at
+    // one row — the absolute bound catches that.
+    val efp = graft.sources.SessionCache.dirFingerprint(spark, sf)
+    val embedBuild = ShuffleAudit.measureFrames(spark, Seq(
+      "embed_pair_build" -> (() =>
+        graft.operators.Dedup.embedPairsBuild(spark, sf, efp,
+          graft.operators.Dedup.embedEffectiveCap(spark, sf, efp)))))
+    val eb = embedBuild("embed_pair_build")
+    info(s"embed pair build: ${eb.shuffleBytes} B over ${eb.shuffleRecords} shuffle records")
+    assert(eb.shuffleRecords > 0, "build seam must exercise the pair search")
+    assert(eb.shuffleBytes.toDouble / eb.shuffleRecords < 768.0,
+      s"embed pair build moves ${eb.shuffleBytes.toDouble / eb.shuffleRecords} " +
+        "B/record — vector payloads must never ride the candidate pairs")
+    assert(eb.shuffleBytes < 384 * 1024,
+      s"embed pair build shuffled ${eb.shuffleBytes} B — more than ~1.5× " +
+        "the corpus payload means vectors rode the band fan")
     // simhash pairs: the steady-state query serves TakeOrdered off the
     // session-cached pair artifact — ZERO shuffle (the r13 state; the
     // pair search itself is gated on the build seam below)

@@ -73,6 +73,56 @@ class WaddleApiSpec extends SparkSpec {
     assert(!row.head.isNullAt(row.head.fieldIndex("ended_at")))
   }
 
+  test("a flush writes one file per table and metric_date partition; views match a many-file layout") {
+    val root = Files.createTempDirectory("waddle-1f").toString
+    val cores = spark.sparkContext.defaultParallelism
+    // more rows than cores in every table, so the uncoalesced local scan
+    // would slice each buffer into `cores` files
+    assume(cores > 1, "needs a multi-core session to tell the layouts apart")
+    val n = 4 * cores
+    val sess = new WaddleSession(spark, root, project = "onefile")
+    val runIds = (0 until n).map(i => sess.initRun(s"r$i", Map("lr" -> s"0.$i")))
+    runIds.zipWithIndex.foreach { case (r, i) =>
+      (0 until 3).foreach(st => sess.log(r, Map("loss" -> (i + 1.0) / (st + 1), "acc" -> st * 0.1)))
+      sess.logTag(r, "model", s"m${i % 3}")
+      sess.logArtifact(r, "w.bin", s"weights-$i".getBytes)
+    }
+    sess.flush()
+
+    def dataFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.filter(f => f.isFile && f.getName.endsWith(".parquet"))
+    for (t <- Seq("runs", "kv", "artifacts"))
+      assert(dataFiles(new java.io.File(s"$root/$t")).size == 1, s"$t: one file per flush")
+    val dateDirs = new java.io.File(s"$root/metrics").listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("metric_date=")).toSeq
+    assert(dateDirs.nonEmpty)
+    dateDirs.foreach(d => assert(dataFiles(d).size == 1, s"${d.getName}: one file per flush"))
+
+    // the same rows split across `cores` files per table — the layout the
+    // uncoalesced flush wrote — must read as identical views
+    val split = Files.createTempDirectory("waddle-nf").toString
+    for (t <- Seq("runs", "kv", "artifacts"))
+      spark.read.parquet(s"$root/$t").repartition(cores).write.parquet(s"$split/$t")
+    spark.read.parquet(s"$root/metrics").repartition(cores)
+      .write.partitionBy("metric_date").parquet(s"$split/metrics")
+    assert(dataFiles(new java.io.File(s"$split/runs")).size > 1)
+
+    val now = System.currentTimeMillis() / 1000.0
+    def views(store: WaddleStore) = Seq(
+      store.runs(now).orderBy("id"),
+      store.metrics(runIds.head),
+      store.latestKv("param").orderBy("run_id", "key"),
+      store.latestKv("tag").orderBy("run_id", "key"),
+      store.artifacts(runIds.last),
+      store.metricKeys(),
+      store.metricLeaderboard("loss", now, limit = n),
+      store.metricSummary(runIds.take(3))).map(_.collect().toSeq)
+    val one = views(new WaddleStore(spark, root))
+    assert(one.forall(_.nonEmpty))
+    assert(one.head.size == n && one(1).size == 6)
+    assert(views(new WaddleStore(spark, split)) == one)
+  }
+
   test("compaction preserves every read view and empties the tombstones") {
     val root = Files.createTempDirectory("waddle-cmp").toString
     val sess = new WaddleSession(spark, root, project = "cmp")
