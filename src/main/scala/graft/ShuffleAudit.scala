@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.util.concurrent.atomic.LongAdder
 
@@ -12,6 +13,13 @@ import java.util.concurrent.atomic.LongAdder
   * while one whose shuffle stays card/histogram/band-sized scales with the
   * ANSWER, not the data. Run at two scale factors and diff the growth —
   * SCALING.md records the sf0.01 → sf0.1 table.
+  *
+  * The same listener counts each query's jobs, completed stages and
+  * tasks — the deterministic half of the wall model (wall ≈ stages ×
+  * scheduling floor + data work). Wall times on a steal-bursty host
+  * wobble ±50%; stage counts don't, so a lost exchange reuse or a
+  * broadcast demoted to a join stage chain is attributable even from a
+  * noisy run (SCALING.md "Stage-count budget").
   *
   * Protocol: one warm-up lap over the audited queries first, so
   * SessionCache artifacts (verdict frame, LM scores, tfidf, band stores)
@@ -28,8 +36,9 @@ import java.util.concurrent.atomic.LongAdder
   *    reads (SessionCache checkpoint blocks land there) and under-reports
   *    some vectorized parquet scans, so RECORDS are the input measure;
   *    shuffle WRITE metrics are exact;
-  *  - the listener bus is async, so each query waits for the task-end
-  *    count to quiesce before snapshotting.
+  *  - the listener bus is async, so each snapshot first drains it
+  *    ([[org.apache.spark.GraftBus.drain]]; a stuck bus throws instead
+  *    of returning short deltas).
   */
 object ShuffleAudit {
 
@@ -50,14 +59,20 @@ object ShuffleAudit {
     "q_json_extract", "q_embed_outliers", "q_boilerplate",
     "q_profile_events")
 
-  final case class Audit(inputRecords: Long, shuffleBytes: Long, shuffleRecords: Long)
+  final case class Audit(
+      inputRecords: Long, shuffleBytes: Long, shuffleRecords: Long,
+      jobs: Long, stages: Long, tasks: Long)
 
-  private def exec(df: DataFrame): Unit =
+  /** Full execution of every output column, nothing delivered — the
+    * audit's action and ScaleBench's timed one.
+    */
+  private[graft] def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   /** Run `names` against `sfDir` (after a warm-up lap) and return each
-    * query's measured task metrics. Shared by [[main]] and
-    * ShuffleAuditSpec, which pins the zero-/card-sized-shuffle invariants.
+    * query's measured task metrics. Shared by [[main]], ScaleBench and
+    * ShuffleAuditSpec, which pins the zero-/card-sized-shuffle invariants
+    * and the stage counts of the documented topologies.
     */
   def measure(
       spark: SparkSession,
@@ -82,43 +97,39 @@ object ShuffleAudit {
     val inputRecs = new LongAdder
     val shuffle = new LongAdder
     val shuffleRecs = new LongAdder
+    val jobs = new LongAdder
+    val stages = new LongAdder
     val tasks = new LongAdder
     val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.increment()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        stages.increment()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        tasks.increment()
         val m = te.taskMetrics
         if (m != null) {
           inputRecs.add(m.inputMetrics.recordsRead)
           shuffle.add(m.shuffleWriteMetrics.bytesWritten)
           shuffleRecs.add(m.shuffleWriteMetrics.recordsWritten)
-          tasks.increment()
         }
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    // poll until no task-end lands for 300 ms (3 stable 100 ms probes),
-    // bounded at 10 s
-    def quiesce(): Unit = {
-      var stable = 0
-      var last = tasks.sum
-      var waited = 0
-      while (stable < 3 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        val cur = tasks.sum
-        if (cur == last) stable += 1 else { stable = 0; last = cur }
-      }
+    val counters = Seq(inputRecs, shuffle, shuffleRecs, jobs, stages, tasks)
+    def snapshot(): Seq[Long] = {
+      GraftBus.drain(spark.sparkContext)
+      counters.map(_.sum)
     }
+    spark.sparkContext.addSparkListener(listener)
     try {
       frames.flatMap { case (n, f) =>
-        quiesce()
-        val (i0, s0, r0) = (inputRecs.sum, shuffle.sum, shuffleRecs.sum)
-        try {
-          exec(f())
-          quiesce()
-          Some(n -> Audit(
-            inputRecs.sum - i0, shuffle.sum - s0, shuffleRecs.sum - r0))
-        } catch { case e: Throwable =>
+        val before = snapshot()
+        val ran = try { exec(f()); true } catch { case e: Throwable =>
           System.err.println(s"[audit] $n failed: ${e.getMessage}")
-          None
+          false
+        }
+        Option.when(ran) {
+          val d = snapshot().zip(before).map { case (a, b) => a - b }
+          n -> Audit(d(0), d(1), d(2), d(3), d(4), d(5))
         }
       }.toMap
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -141,7 +152,7 @@ object ShuffleAudit {
       audits.get(n) match {
         case Some(a) =>
           totalSh += a.shuffleBytes
-          println(s"""{"query":"$n","input_records":${a.inputRecords},"shuffle_bytes":${a.shuffleBytes},"shuffle_records":${a.shuffleRecords}}""")
+          println(s"""{"query":"$n","input_records":${a.inputRecords},"shuffle_bytes":${a.shuffleBytes},"shuffle_records":${a.shuffleRecords},"jobs":${a.jobs},"stages":${a.stages},"tasks":${a.tasks}}""")
         case None =>
           println(s"""{"query":"$n","error":"failed"}""")
       }

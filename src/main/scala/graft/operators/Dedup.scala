@@ -297,8 +297,8 @@ object Dedup {
   /** Diagnostic: (iterations run, converged-before-bound) of the LAST
     * [[propagateLabels]] call in this JVM — the decade-bench observable
     * (r19 verdict #5: "does propagation still converge at 500k docs?"
-    * needs a number, not a wall). Write-once per call, read by dev
-    * mains/specs; not part of any query result.
+    * needs a number, not a wall). Write-once per call, read by
+    * ScaleBench's dedup mode; not part of any query result.
     */
   private[graft] val lastPropagation =
     new java.util.concurrent.atomic.AtomicReference[(Int, Boolean)]((0, true))

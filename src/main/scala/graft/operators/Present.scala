@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * from a SEPARATE sampling job over the child; `cardSort` plans the
   * same total order as `Repartition(1, shuffle = false)` + a
   * partition-local sort. What each mode actually saves (both A/B'd by
-  * [[graft.SortFloorProbe]] on this machine):
+  * SortFloorProbe on this machine):
   *
   *  - MATERIALIZATION (collect, Verify's parquet dump, a real consumer):
   *    the sampling job + range exchange disappear — a 25-row aggregate

@@ -68,6 +68,32 @@ class ContractSpec extends SparkSpec {
       s"justification rows for queries that ARE oracle-checked (or unknown): ${(justified -- rowsOnly).toSeq.sorted}")
   }
 
+  test("every main under src/main/scala is a README tool (and vice versa)") {
+    // one-off probes must not creep back into the shipped library
+    // unannounced: the runnable entry points are exactly the
+    // `runMain graft...` lines README documents
+    import scala.jdk.CollectionConverters._
+    val read = (p: java.nio.file.Path) => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val listed = "runMain (graft\\.[A-Za-z0-9_.]*[A-Za-z0-9_])".r
+      .findAllMatchIn(read(java.nio.file.Paths.get("README.md"))).map(_.group(1)).toSet
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val defined = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val src = read(f)
+      val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(src).map(_.group(1)).getOrElse("")
+      // declarations only: line-anchored, so "object"/"def main(" in a
+      // comment never counts
+      val objects = "(?m)^\\s*(?:private\\S*\\s+)?object (\\w+)".r.findAllMatchIn(src)
+        .map(m => m.start -> m.group(1)).toSeq
+      "(?m)^\\s*def main\\(".r.findAllMatchIn(src).map { m =>
+        s"$pkg.${objects.filter(_._1 < m.start).last._2}"
+      }
+    }.toSet finally walk.close()
+    assert((defined -- listed).isEmpty,
+      s"mains missing from README: ${(defined -- listed).toSeq.sorted}")
+    assert((listed -- defined).isEmpty,
+      s"README lists mains that do not exist: ${(listed -- defined).toSeq.sorted}")
+  }
+
   test("entry returns >0 rows at sf0.001 (driver smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

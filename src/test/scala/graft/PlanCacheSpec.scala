@@ -39,10 +39,10 @@ class PlanCacheSpec extends SparkSpec {
     // and the repeat call still RUNS jobs — reused plan, real execution.
     // The listener bus is async: drain it deterministically before each
     // delta read (fixed sleeps flake on a loaded host — r18 ADVICE)
-    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     val j0 = jobs.sum
     assert(d2.head().getLong(0) == 50L)
-    org.apache.spark.GraftTestBus.waitUntilEmpty(spark.sparkContext)
+    org.apache.spark.GraftBus.drain(spark.sparkContext)
     assert(jobs.sum > j0, "a cache hit must still execute jobs")
   }
 

@@ -172,11 +172,10 @@ class ServerSpec extends SparkSpec {
       spark.listenerManager.register(listener)
       try {
         assert(get(port, s"/api/runs/$r1").statusCode() == 200)
-        // the listener bus is asynchronous: wait for the five, then give a
-        // sixth (the old separate existence probe) time to show up
-        val deadline = System.currentTimeMillis() + 10000
-        while (actions.get < 5 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-        Thread.sleep(500)
+        // every action posted its end event before the reply was sent;
+        // draining the async bus delivers all of them, so a sixth (the old
+        // separate existence probe) is counted whenever it arrived
+        org.apache.spark.GraftBus.drain(spark.sparkContext)
         assert(actions.get == 5, s"run detail ran ${actions.get} SQL actions")
       } finally spark.listenerManager.unregister(listener)
     } finally srv.stop()

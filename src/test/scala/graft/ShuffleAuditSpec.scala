@@ -78,6 +78,23 @@ class ShuffleAuditSpec extends SparkSpec {
           "re-rank must window on the coalesced card, not exchange it")
   }
 
+  test("stage counts hold the documented topology (SCALING.md stage-count budget)") {
+    // stage counts are the deterministic half of the wall model: a lost
+    // exchange reuse or a broadcast demoted to a join stage chain adds
+    // stages even when the bytes stay small. Measured at sf0.001 on this
+    // suite's local[2] session at full execution: q_sim_topk 2 jobs /
+    // 2 stages (broadcast query vector + one TakeOrdered scan stage),
+    // q_join_agg 4 jobs / 4 stages (two dimension broadcasts, the
+    // partial-aggregate scan stage, the card-sized final stage)
+    val audited = ShuffleAudit.measure(spark, sf, Seq("q_sim_topk", "q_join_agg"))
+    audited.foreach { case (n, a) =>
+      info(s"$n: ${a.jobs} jobs / ${a.stages} stages / ${a.tasks} tasks") }
+    assert(audited("q_sim_topk").stages <= 2,
+      s"q_sim_topk ran ${audited("q_sim_topk").stages} stages")
+    assert(audited("q_join_agg").stages <= 4,
+      s"q_join_agg ran ${audited("q_join_agg").stages} stages")
+  }
+
   test("text pair-search BUILDS shuffle keys, never text (artifact-era seam gates)") {
     // the r13 artifact moves put the minhash/ngram pair searches behind
     // SessionCache, so their steady-state query audits read ~0 B and the
