@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -186,42 +185,22 @@ object AnnIndex {
         Ordering.Double.TotalOrdering.reverse, Ordering.Int))
       .take(nprobe).map(_._1)
 
-  // driver memo of [[pivotGroups]] per (dir, corpus version, k): the
-  // grouping is O(g·k·d) (a second or two at the 65,536-pivot cap) and a
-  // pure function of the rounded centroids — a served probe must not
-  // re-derive it per query. Retain-2 per dir like centroidCache (values
-  // carry an insertion tick): the earlier evict-all-siblings form threw
-  // away the OTHER k on every `spark.graft.ann.pivots` alternation (the
-  // r18 A/B pattern), regrouping O(g·k·d) per flip — exactly the thrash
-  // the centroid cache's discipline exists to prevent (r18 ADVICE).
-  private val pivotGroupCache =
-    new ConcurrentHashMap[String, (Long, Seq[(Array[Double], Seq[Int])])]()
-  private val pivotGroupTick = new java.util.concurrent.atomic.AtomicLong()
-
+  // driver memo of [[pivotGroups]] per (dir, corpus version, codebook):
+  // the grouping is O(g·k·d) (a second or two at the 65,536-pivot cap)
+  // and a pure function of the rounded centroids — a served probe must
+  // not re-derive it per query. cents.size AND the centroid digest are in
+  // the name (r20, the assignTag finding's sibling): a
+  // `spark.graft.ann.pivots` flip regroups the other codebook while the
+  // first stays resident (no A/B thrash, r18 ADVICE), and a SAME-k
+  // retrain (seed-mode/oversample/iters flip) must regroup too — the
+  // k-only key served the first variant's super-pivot groups to every
+  // later same-k codebook of a session, distorting probes-mode cell
+  // rankings
   private[graft] def pivotGroupsCached(
       spark: SparkSession, dir: String, version: String,
-      cents: Seq[Array[Double]]): Seq[(Array[Double], Seq[Int])] = {
-    val prefix = s"${spark.sparkContext.applicationId}|$dir|"
-    // cents.size AND the centroid digest in the key (r20, the assignTag
-    // finding's sibling): a `spark.graft.ann.pivots` flip regroups the
-    // other codebook, and a SAME-k retrain (seed-mode/oversample/iters
-    // flip) must regroup too — the k-only key served the first variant's
-    // super-pivot groups to every later same-k codebook of a session,
-    // distorting probes-mode cell rankings (caught by DevSeedLaw's
-    // cross-session disagreement on deterministic batch recall)
-    val key = s"$prefix$version|k${cents.size}|c${centsDigest(cents)}"
-    val entry = pivotGroupCache.computeIfAbsent(
-      key, _ => pivotGroupTick.incrementAndGet() -> pivotGroups(cents))
-    // evict AFTER insertion, keeping the two newest entries under the dir
-    // (current + one sibling: the other k of an A/B, or one superseded
-    // corpus version); remove(k, v) so a racing re-insert survives
-    val mine = new scala.collection.mutable.ArrayBuffer[
-      (String, (Long, Seq[(Array[Double], Seq[Int])]))]()
-    pivotGroupCache.forEach((k, v) => if (k.startsWith(prefix)) mine += (k -> v))
-    mine.sortBy(-_._2._1).drop(2)
-      .foreach { case (k, v) => pivotGroupCache.remove(k, v) }
-    entry._2
-  }
+      cents: Seq[Array[Double]]): Seq[(Array[Double], Seq[Int])] =
+    SessionCache.memo(spark, dir, version,
+      s"ann.pivot_groups|k${cents.size}|c${centsDigest(cents)}")(pivotGroups(cents))
 
   /** Assignment-CONSISTENT probe-cell ranking — use this, not raw
     * [[probedCells]], wherever the probed store was filed by
@@ -751,47 +730,19 @@ object AnnIndex {
     */
   val LshProbeFlips = 1
 
-  // one build attempt per (root, index version) per JVM; the on-disk
-  // _SUCCESS probe below makes cross-JVM reuse work too
-  private val building = new ConcurrentHashMap[String, String]()
-  // resolved index frames: `spark.read.parquet` re-lists the directory and
-  // re-reads footers on EVERY call, so a probe-per-query workload pays an
-  // index-sized listing per probe. The path embeds the corpus version +
-  // parameter hash, so a resolved frame can never serve a stale index —
-  // same discipline as Tables.resolved. Keyed by session identity so plans
-  // never leak across sessions.
-  private val resolved = new ConcurrentHashMap[(String, String), org.apache.spark.sql.DataFrame]()
-
-  private val resolvedHooked = ConcurrentHashMap.newKeySet[String]()
-
+  /** Resolved index frame for `path`, one [[SessionCache.memo]] entry
+    * per (session, corpus dir, index family) versioned by the path:
+    * `spark.read.parquet` re-lists the directory and re-reads footers on
+    * EVERY call, so a probe-per-query workload would pay an index-sized
+    * listing per probe. The path embeds the corpus version + parameter
+    * hash, so a resolved frame can never serve a stale index, and a new
+    * index version replaces the old frame — same discipline as
+    * Tables.resolved. */
   private def resolvedFrame(
-      spark: SparkSession, path: String, schema: String): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    val sessionKey = appId + "/" + System.identityHashCode(spark)
-    // lifecycle: SparkListener has no per-session stop event, so a
-    // process that churns newSession() instances would otherwise retain
-    // one resolved plan per dead session until application end — bound
-    // the map and clear on overflow instead (a cleared entry costs one
-    // re-listing on its next probe, never a wrong answer; the
-    // application-end hook below is just final cleanup). ONE listener per
-    // APPLICATION, not per session key: a per-session listener on the
-    // shared bus would itself accumulate without bound under session churn
-    // — the exact leak the map bound exists to prevent.
-    if (resolved.size > 128) resolved.clear()
-    if (resolvedHooked.add(appId)) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            resolved.keySet.removeIf(_._1.startsWith(appId + "/"))
-            resolvedHooked.remove(appId)
-            ()
-          }
-        })
-    }
-    resolved.computeIfAbsent((sessionKey, path),
-      _ => spark.read.schema(schema).parquet(path))
-  }
+      spark: SparkSession, dir: String, family: String, path: String,
+      schema: String): DataFrame =
+    SessionCache.memo(spark, dir, path, s"ann.frame|$family")(
+      spark.read.schema(schema).parquet(path))
 
   /** Drop resolved frames for `path` (all sessions). A resolved frame
     * snapshots the directory's file listing at first probe, which is
@@ -800,39 +751,18 @@ object AnnIndex {
     * place — call this after (or periodically between) streamed appends
     * so same-JVM probes re-list and see the new buckets.
     */
-  def invalidateResolved(path: String): Unit = {
-    resolved.keySet.removeIf(_._2 == path)
-    ()
-  }
-  // codebook per (dir, corpus fingerprint): the probe and the index build
-  // MUST score against identical pivots. Values carry an insertion tick so
-  // eviction can order versions without timestamps.
-  private val centroidCache =
-    new ConcurrentHashMap[String, (Long, Seq[Array[Double]])]()
-  private val centroidTick = new java.util.concurrent.atomic.AtomicLong()
+  def invalidateResolved(path: String): Unit =
+    SessionCache.invalidateWhere((name, version) =>
+      name.startsWith("ann.frame|") && version == path)
 
-  // corpus row count per (dir, corpus fingerprint) — sizes both index
-  // geometries (IVF pivot count, LSH band bits); one count job per corpus
-  // version. Superseded-version entries for the same dir are dropped on
-  // insert (values are single boxed longs, but a service over a mutating
-  // corpus must not accumulate one per generation).
-  private val corpusCounts = new ConcurrentHashMap[String, java.lang.Long]()
+  /** Corpus row count — sizes both index geometries (IVF pivot count,
+    * LSH band bits). The one embeddings count of the engine
+    * ([[Tables.cachedCount]]): one job per corpus version, shared with
+    * the embed-dedup band bits, and its supersession hook is what
+    * invalidates the catalog's pinned listing on the pure-ANN path. */
   private[graft] def corpusCount(
-      spark: SparkSession, dir: String, version: String): Long = {
-    val prefix = s"${spark.sparkContext.applicationId}|$dir|"
-    val key = s"$prefix$version"
-    // a superseded entry means the DIRECTORY mutated: the catalog's
-    // resolved plan pins the pre-mutation file listing, so without the
-    // invalidation the recount — and the codebook/banding builds that run
-    // right after it against the same catalog — would read the OLD file
-    // set and rebuild a stale index under the new version token (the
-    // Dedup probe caches learned this in r11; the pure-ANN path had no
-    // detector of its own until this count landed)
-    if (corpusCounts.keySet.removeIf(k => k.startsWith(prefix) && k != key))
-      Tables.invalidate(dir)
-    corpusCounts.computeIfAbsent(key,
-      _ => Tables.embeddings(spark, dir).count())
-  }
+      spark: SparkSession, dir: String, version: String): Long =
+    Tables.cachedCount(spark, dir, "embeddings", version)
 
   private def indexRoot(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.ann.indexRoot")
@@ -899,17 +829,12 @@ object AnnIndex {
       spark: SparkSession, dir: String, version: String): Seq[Array[Double]] = {
     // corpus-size-adaptive k (√n clamp, conf-overridable): the count job
     // runs once per corpus version, shared with the LSH geometry via
-    // [[corpusCount]]. kTarget is IN the key — a mid-session
+    // [[corpusCount]]. kTarget is IN the name — a mid-session
     // `spark.graft.ann.pivots` change must train the other codebook, not
     // serve this one (downstream store versions hash the centroids, so
     // they follow automatically)
     val kTarget = pivotCount(spark, corpusCount(spark, dir, version))
-    // seed mode, oversample factor, and Lloyd iteration count are IN the
-    // key: a trained-state knob flip must train the other codebook, not
-    // serve this one (the kTarget discipline)
-    val key = s"$dir|$version|k$kTarget|s${seedMode(spark)}" +
-      s"|l${seedOversample(spark)}|i${lloydIters(spark)}"
-    val entry = centroidCache.computeIfAbsent(key, _ => centroidTick.incrementAndGet() -> {
+    SessionCache.memo(spark, dir, version, centroidName(spark, kTarget)) {
       val sample = kmeansSample(spark, dir, sampleSize(kTarget))
       var cents: Seq[Array[Double]] =
         if (seedMode(spark) == "plusplus") seedPlusPlus(spark, sample, kTarget)
@@ -942,23 +867,16 @@ object AnnIndex {
       }
       // round for cross-run stability at the cell boundary
       cents.map(_.map(x => math.rint(x * 1e6) / 1e6))
-    })
-    // superseded-version entries for the same corpus dir are dead weight
-    // (k×dim doubles each) on a service that re-ingests. Evict AFTER
-    // insertion, retaining the TWO newest entries per dir (current + one
-    // superseded — the disk index's retain-one policy): two readers
-    // holding different live version tokens both stay cached, so neither
-    // can evict the other and thrash the expensive k-means build (the
-    // earlier evict-on-miss form alternate-evicted exactly that way).
-    // remove(k, v) not remove(k): a key re-inserted with a fresh tick
-    // between the snapshot and the removal must survive.
-    val mine = new scala.collection.mutable.ArrayBuffer[
-      (String, (Long, Seq[Array[Double]]))]()
-    centroidCache.forEach((k, v) => if (k.startsWith(s"$dir|")) mine += (k -> v))
-    mine.sortBy(-_._2._1).drop(2)
-      .foreach { case (k, v) => centroidCache.remove(k, v) }
-    entry._2
+    }
   }
+
+  /** The codebook's memo name: k, seed mode, oversample factor and Lloyd
+    * iteration count are IN it — a trained-state knob flip trains the
+    * other codebook instead of serving this one, and an A/B keeps both
+    * resident; a new corpus version replaces each. */
+  private def centroidName(spark: SparkSession, kTarget: Int): String =
+    s"ann.centroids|k$kTarget|s${seedMode(spark)}" +
+      s"|l${seedOversample(spark)}|i${lloydIters(spark)}"
 
   /** Distributed, DETERMINISTIC k-means‖ D² seeding over the (already
     * checkpointed) sample — the r19 fix for the hash-seeded recall
@@ -1581,9 +1499,8 @@ object AnnIndex {
   def peekAssignTag(
       spark: SparkSession, dir: String, version: String): Option[String] = {
     val kTarget = pivotCount(spark, corpusCount(spark, dir, version))
-    val key = s"$dir|$version|k$kTarget|s${seedMode(spark)}" +
-      s"|l${seedOversample(spark)}|i${lloydIters(spark)}"
-    Option(centroidCache.get(key)).map(e => tagOf(spark, e._2))
+    SessionCache.peek[Seq[Array[Double]]](
+      spark, centroidName(spark, kTarget), dir, version).map(tagOf(spark, _))
   }
 
   def assignTag(spark: SparkSession, dir: String, version: String): String =
@@ -1665,11 +1582,15 @@ object AnnIndex {
         .foreach(st => fs.delete(st.getPath, true))
     }
 
-  /** Build-once protocol shared by both indexes: if `path` lacks a
+  /** Build-once protocol shared by every index family: if `path` lacks a
     * `_SUCCESS` marker, run `write(stagingPath)` and atomically rename the
     * staging dir into place, then evict superseded versions (retain-one).
-    * One attempt per path per JVM via [[building]]; the on-disk marker
-    * makes cross-JVM reuse work.
+    * One ensure per (session, corpus dir, family) and index version: a
+    * [[SessionCache.memo]] entry whose version IS the index version, so
+    * flipping back to a version retain-one has since deleted (a
+    * `spark.graft.ann.pivots` 16 → 20 → 24 → 16 A/B) is a miss that
+    * re-checks the marker and rebuilds, never a stale path. The on-disk
+    * marker makes cross-JVM reuse work.
     *
     * Cross-JVM race discipline: this NARROWS the destroy window, it does
     * not eliminate it. The marker is re-checked immediately before the
@@ -1687,11 +1608,11 @@ object AnnIndex {
     * would otherwise leak a full index-sized copy forever.
     */
   private def ensureBuilt(
-      spark: SparkSession, root: String, prefix: String, version: String,
-      retiredPrefixes: Seq[String] = Nil)(
+      spark: SparkSession, dir: String, root: String, prefix: String,
+      version: String, retiredPrefixes: Seq[String] = Nil)(
       write: String => Unit): String = {
     val path = s"$root/${prefix}_$version"
-    building.computeIfAbsent(path, _ => {
+    SessionCache.memo(spark, dir, version, s"ann.index|$root/$prefix") {
       val p = new Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val marker = new Path(p, "_SUCCESS")
@@ -1722,14 +1643,8 @@ object AnnIndex {
       }
       evictSuperseded(fs, root, prefix, s"${prefix}_$version")
       retiredPrefixes.foreach(evictRetiredFamily(fs, root, _))
-      // drop resolved frames of superseded versions: a long-lived service
-      // whose corpus keeps changing must not accumulate one dead plan per
-      // index generation (their directories are evicted above anyway)
-      resolved.keySet.removeIf { case (_, p) =>
-        p.startsWith(s"$root/${prefix}_") && p != path
-      }
       path
-    })
+    }
   }
 
   /** Ensure the cluster-partitioned inverted file exists for the corpus at
@@ -1777,7 +1692,7 @@ object AnnIndex {
 
   def ensureIvf(spark: SparkSession, dir: String, fp: String): String = {
     val cbHash = coarseCbHash(spark, dir, fp)
-    ensureBuilt(spark, indexRoot(spark),
+    ensureBuilt(spark, dir, indexRoot(spark),
       s"ivf_${dirFamily(dir)}", s"${fp}_$cbHash",
       retiredPrefixes = Seq(s"ivf_${Integer.toHexString(dir.hashCode)}")) { staging =>
       coarseAssign(spark, dir, fp)(
@@ -1807,7 +1722,7 @@ object AnnIndex {
 
   /** As [[ivf]] with the corpus version precomputed by the caller. */
   def ivf(spark: SparkSession, dir: String, version: String): DataFrame =
-    resolvedFrame(spark, ensureIvf(spark, dir, version), IvfSchema)
+    resolvedFrame(spark, dir, "ivf", ensureIvf(spark, dir, version), IvfSchema)
 
   /** Read schema for the PQ-coded inverted file ([[ensureIvfPq]]):
     * same cast-free INT partition column as [[IvfSchema]], but the
@@ -1845,7 +1760,7 @@ object AnnIndex {
       s"pq${PqIndex.M}x${PqIndex.Ksub}".getBytes("UTF-8") ++ bb.array()
     }
     val cbHash = coarseCbHash(spark, dir, fp, pqcbBytes)
-    ensureBuilt(spark, indexRoot(spark),
+    ensureBuilt(spark, dir, indexRoot(spark),
       s"ivfpq_${dirFamily(dir)}", s"${fp}_$cbHash") { staging =>
       import spark.implicits._
       // one-row broadcast codebook: the 1-row crossJoin idiom (zero fan)
@@ -1868,7 +1783,7 @@ object AnnIndex {
 
   /** The PQ-coded inverted file as a DataFrame (see [[IvfPqSchema]]). */
   def ivfPq(spark: SparkSession, dir: String, version: String): DataFrame =
-    resolvedFrame(spark, ensureIvfPq(spark, dir, version), IvfPqSchema)
+    resolvedFrame(spark, dir, "ivfpq", ensureIvfPq(spark, dir, version), IvfPqSchema)
 
   /** Read schema for the int8 quantized store. */
   private val Int8Schema = "vec_id BIGINT, scale DOUBLE, qv ARRAY<TINYINT>"
@@ -1889,7 +1804,7 @@ object AnnIndex {
     * reconstruction-error audit of this exact arithmetic.
     */
   def ensureInt8(spark: SparkSession, dir: String, fp: String): String =
-    ensureBuilt(spark, indexRoot(spark), s"int8_${dirFamily(dir)}", fp) {
+    ensureBuilt(spark, dir, indexRoot(spark), s"int8_${dirFamily(dir)}", fp) {
       staging =>
         int8Quantize(
           Tables.spread(Tables.embeddings(spark, dir))
@@ -1924,7 +1839,7 @@ object AnnIndex {
 
   /** The int8 store as a DataFrame (see [[Int8Schema]]). */
   def int8(spark: SparkSession, dir: String, version: String): DataFrame =
-    resolvedFrame(spark, ensureInt8(spark, dir, version), Int8Schema)
+    resolvedFrame(spark, dir, "int8", ensureInt8(spark, dir, version), Int8Schema)
 
   /** The banded-signature transform — key-only output, shared verbatim by
     * the batch index build and the streaming ingester
@@ -1965,7 +1880,7 @@ object AnnIndex {
   /** As [[ensureLsh]] with the corpus version precomputed by the caller. */
   def ensureLsh(spark: SparkSession, dir: String, fp: String): String = {
     val geom = lshGeom(spark, dir, fp)
-    ensureBuilt(spark, indexRoot(spark),
+    ensureBuilt(spark, dir, indexRoot(spark),
       s"lsh_${dirFamily(dir)}", s"${fp}_${geom.versionTag}",
       retiredPrefixes = Seq(s"lsh_${Integer.toHexString(dir.hashCode)}")) { staging =>
       withBandGrp(bandify(
@@ -2015,25 +1930,15 @@ object AnnIndex {
   // version, vec id) — index METADATA like the centroids, not a query
   // answer — so a probe-per-query workload must not re-run the 1-row
   // banding job (a full scheduler round trip) per probe. ≤ LshBands
-  // pairs per entry; superseded versions for the same (dir, vecId) are
-  // dropped on insert like every other version-keyed cache here.
-  private val queryBandCache =
-    new ConcurrentHashMap[String, Seq[(Int, Long)]]()
+  // pairs per entry, one memo entry per vec id.
 
   /** As [[queryBands]] with the corpus version precomputed by the caller
     * — a probe resolves the version ONCE and threads it through geometry,
     * band fetch, and index read (the round-7 triple-listing lesson). */
   def queryBands(
       spark: SparkSession, dir: String, vecId: Long,
-      version: String): Seq[(Int, Long)] = {
-    val prefix = s"${spark.sparkContext.applicationId}|$dir|$vecId|"
-    val key = s"$prefix$version"
-    if (queryBandCache.keySet.removeIf(k => k.startsWith(prefix) && k != key))
-      Tables.invalidate(dir)
-    // bound the map under many distinct query ids (a served workload):
-    // a cleared entry costs one re-banding job, never a wrong answer
-    if (queryBandCache.size > 4096) queryBandCache.clear()
-    queryBandCache.computeIfAbsent(key, _ =>
+      version: String): Seq[(Int, Long)] =
+    SessionCache.memo(spark, dir, version, s"ann.bands|$vecId")(
       bandify(
         Tables.embeddings(spark, dir)
           .where(col("vec_id") === vecId)
@@ -2041,14 +1946,11 @@ object AnnIndex {
         lshGeom(spark, dir, version))
         .select("band_id", "band_key")
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq)
-  }
 
   // the raw embedding of one query vector — the same pure-function-of-
-  // (corpus version, vec id) argument as queryBandCache: PQ probes turn
-  // it into a driver-math ADC lookup table, so without the cache every
+  // (corpus version, vec id) argument as [[queryBands]]: PQ probes turn
+  // it into a driver-math ADC lookup table, so without the memo every
   // probe pays a 1-row scan job just to re-fetch an unchanged vector
-  private val queryVecCache =
-    new ConcurrentHashMap[String, Array[Double]]()
 
   /** The embedding of ONE query vector, collected once per (corpus
     * version, vec id) — bounded at d doubles per entry, eviction and
@@ -2065,37 +1967,19 @@ object AnnIndex {
     */
   def queryVectors(
       spark: SparkSession, dir: String, vecIds: Seq[Long],
-      version: String): Map[Long, Array[Double]] = {
-    val appId = spark.sparkContext.applicationId
-    def prefix(id: Long) = s"$appId|$dir|$id|"
-    def key(id: Long) = s"${prefix(id)}$version"
-    // no short-circuit: EVERY id's superseded entries must be dropped,
-    // not just the first detected one's
-    val superseded = vecIds.distinct.map { id =>
-      queryVecCache.keySet.removeIf(k =>
-        k.startsWith(prefix(id)) && k != key(id))
-    }.contains(true)
-    if (superseded) Tables.invalidate(dir)
-    if (queryVecCache.size > 4096) queryVecCache.clear()
-    // hold the hit values locally: a concurrent caller's size-triggered
-    // clear() between our put and a final cache read must not turn a
-    // just-fetched vector into a null in the returned map
-    val hits = vecIds.distinct.flatMap(id =>
-      Option(queryVecCache.get(key(id))).map(id -> _)).toMap
-    val missing = vecIds.distinct.filterNot(hits.contains)
-    val fetched = if (missing.isEmpty) Map.empty[Long, Array[Double]] else {
+      version: String): Map[Long, Array[Double]] =
+    SessionCache.memoAll(spark, dir, version,
+      vecIds.map(id => s"ann.vec|$id")) { missing =>
+      val ids = missing.map(_.stripPrefix("ann.vec|").toLong)
       val got = Tables.embeddings(spark, dir)
-        .where(col("vec_id").isin(missing: _*))
+        .where(col("vec_id").isin(ids: _*))
         .select(col("vec_id"), col("embedding").cast("array<double>"))
         .collect()
         .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-      val absent = missing.filterNot(got.contains)
+      val absent = ids.filterNot(got.contains)
       require(absent.isEmpty, s"query vectors not in corpus: $absent")
-      got.foreach { case (id, v) => queryVecCache.put(key(id), v) }
-      got
-    }
-    hits ++ fetched
-  }
+      got.map { case (id, v) => s"ann.vec|$id" -> v }
+    }.map { case (n, v) => n.stripPrefix("ann.vec|").toLong -> v }
 
   // Retrieval-stage candidate pools — the (qid → candidate vec_id) sets a
   // tier's re-rank touches. A pool is a pure function of (corpus version,
@@ -2106,45 +1990,25 @@ object AnnIndex {
   // it adds no new driver-size risk. A probe-per-query workload then pays
   // the candidate JOB once per (corpus version, conf) instead of 2–3 AQE
   // jobs of scheduling floor per invocation — the r17 ANN stage diet.
-  // Holder idiom (not computeIfAbsent): the compute runs a Spark job, and
-  // running it inside the map's bin lock would block concurrent
-  // first-touch callers on unrelated keys (the capHistRows ADVICE class).
-  private final class PoolMemo(compute: () => Seq[(Long, Long)]) {
-    lazy val get: Seq[(Long, Long)] = compute()
-  }
-  private val poolCache = new ConcurrentHashMap[String, PoolMemo]()
 
-  /** Test seam: the live pool keys (spec pins that conf knobs a pool's
+  /** Test seam: the live pool names (spec pins that conf knobs a pool's
     * compute depends on — nprobe, re-rank depth — are folded into its
     * tag; the r20 cap-sweep found the ivfpq pools nprobe-less).
     */
-  private[graft] def pooledKeys: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    poolCache.keySet.asScala.toSet
-  }
+  private[graft] def pooledKeys: Set[String] =
+    SessionCache.names.filter(_.startsWith("ann.pool|"))
 
   /** Memoized candidate pool for one tier × conf × corpus version.
     * `tag` names the tier AND every conf knob that changes the pool
     * (re-rank depth, assignment geometry, query-set size — the r13
-    * ADVICE cap-key discipline); superseded corpus versions for the same
-    * (dir, tag) are dropped on insert with the catalog invalidated, the
-    * queryBands eviction discipline, so a mutated corpus re-runs the
-    * candidate job instead of re-ranking a stale pool.
+    * ADVICE cap-key discipline); a new corpus version replaces the
+    * (dir, tag) entry with the catalog invalidated, so a mutated corpus
+    * re-runs the candidate job instead of re-ranking a stale pool.
     */
   def candidatePool(
       spark: SparkSession, dir: String, tag: String, version: String)(
-      compute: => Seq[(Long, Long)]): Seq[(Long, Long)] = {
-    val prefix = s"${spark.sparkContext.applicationId}|$dir|$tag|"
-    val key = s"$prefix$version"
-    if (poolCache.keySet.removeIf(k => k.startsWith(prefix) && k != key))
-      Tables.invalidate(dir)
-    // bound under many distinct (tier, conf) tags; a cleared entry costs
-    // one candidate job, never a wrong answer
-    if (poolCache.size > 4096) poolCache.clear()
-    val holder = new PoolMemo(() => compute)
-    val prior = poolCache.putIfAbsent(key, holder)
-    (if (prior != null) prior else holder).get
-  }
+      compute: => Seq[(Long, Long)]): Seq[(Long, Long)] =
+    SessionCache.memo(spark, dir, version, s"ann.pool|$tag")(compute)
 
   /** [[queryBands]] expanded by multi-probe ([[LshProbeFlips]]): each
     * band's exact bucket plus every bucket whose key differs in ≤ flips
@@ -2194,5 +2058,5 @@ object AnnIndex {
 
   /** As [[lshBands]] with the corpus version precomputed by the caller. */
   def lshBands(spark: SparkSession, dir: String, version: String): DataFrame =
-    resolvedFrame(spark, ensureLsh(spark, dir, version), LshSchema)
+    resolvedFrame(spark, dir, "lsh", ensureLsh(spark, dir, version), LshSchema)
 }

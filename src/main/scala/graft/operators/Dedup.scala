@@ -571,7 +571,7 @@ object Dedup {
     val dfp = SessionCache.dirFingerprint(spark, dir)
     val fps = simhashFps(spark, dir, dfp)
     // skew probe over the cached 16 B/row fingerprint artifact — one
-    // card-sized aggregate per (app, corpus version); a skew-free corpus
+    // card-sized aggregate per (session, corpus version); a skew-free corpus
     // skips the cap window entirely
     val cap = skewAdaptiveTextCap(spark, dir, "simhash", dfp) {
       simhashSegs(fps).groupBy("seg_id", "seg").count()
@@ -681,7 +681,7 @@ object Dedup {
     */
   def dedupNgram(spark: SparkSession, dir: String): DataFrame = {
     // skew probe over the 3 meta columns + content hash (no gram
-    // hashing) — one card-sized aggregate per (app, corpus version).
+    // hashing) — one card-sized aggregate per (session, corpus version).
     // Widths count DISTINCT texts per block because the build collapses
     // exact duplicates first: probing raw rows would engage the rank
     // window for floods the collapse already absorbs. Slack 2 because
@@ -872,49 +872,27 @@ object Dedup {
         val g = bucketCap(spark); if (g > 0) g else 64
       }
 
-  /** Corpus row count for band-bit selection, cached per (app, corpus
-    * version): one parquet count job per corpus generation, not per query.
-    * Keyed by [[SessionCache.dirFingerprint]] so appended data re-counts.
-    */
-  private val corpusCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  // superseded-version entries are dropped on insert (same discipline as
-  // SessionCache), and a supersession — the fingerprint saying the dir
-  // MUTATED — also invalidates the catalog's resolved plan, whose pinned
-  // file listing would otherwise feed the recompute the pre-mutation file
-  // set. Values are single Longs, but a long-lived service over a mutating
-  // corpus must not accumulate one entry per generation either.
-  private def cachedLong(
-      cache: java.util.concurrent.ConcurrentHashMap[String, java.lang.Long],
-      dir: String, prefix: String, fp: String)(compute: => Long): Long = {
-    val key = s"$prefix|$fp"
-    if (cache.keySet.removeIf(k => k.startsWith(s"$prefix|") && k != key))
-      Tables.invalidate(dir)
-    cache.computeIfAbsent(key, _ => compute)
-  }
-  private def embedCount(spark: SparkSession, dir: String, fp: String): Long =
-    cachedLong(corpusCounts, dir,
-      s"${spark.sparkContext.applicationId}|$dir", fp) {
-      Tables.embeddings(spark, dir).count()
-    }
-
-  /** Widest LSH bucket of the corpus under the adaptive geometry, cached
-    * like [[embedCount]] (key folds in the band bits — a geometry change
-    * re-probes). WHY a probe exists at all: [[capBuckets]]'s rank window
+  /** Widest LSH bucket of the corpus under the adaptive geometry, one
+    * [[SessionCache.memo]] entry per (session, corpus version, generator
+    * family) — a superseded version is replaced with the catalog's
+    * pinned listing invalidated, so the re-probe reads the post-mutation
+    * file set. WHY a probe exists at all: [[capBuckets]]'s rank window
     * is the right SKEW guard but costs an exchange + per-bucket sort plus
     * the stage-floor of the SMJ regime it forces on the band self-join —
     * measured ~0.6 s of pure scheduling floor at sf0.1 where NO bucket
     * comes near the cap. The probe is one card-sized aggregate (≤
     * bands × 2^bandBits partial rows shuffle, never vectors) run once per
-    * (app, corpus version); when the widest bucket fits the cap, the cap
+    * corpus version; when the widest bucket fits the cap, the cap
     * is a proven no-op and [[dedupEmbed]] plans the window-free join.
     */
-  private val bucketWidths =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def bucketWidth(
+      spark: SparkSession, dir: String, family: String, version: String)(
+      widest: => Long): Long =
+    SessionCache.memo(spark, dir, version, s"dedup.width|$family")(widest)
 
   /** [[textBucketCap]] with the embed path's skew probe applied to a text
     * generator: pay the rank window only when `widest` — a card-sized
-    * probe cached once per (app, corpus version, generator family) —
+    * probe cached once per (session, corpus version, generator family) —
     * proves some bucket actually exceeds the cap; a skew-free corpus
     * plans the window-free join. `slack` scales the comparison for
     * generators whose join-side bucket is wider than the probed unit
@@ -931,25 +909,16 @@ object Dedup {
     val cap = textBucketCap(spark)
     if (cap <= 0) 0
     else {
-      val w = cachedLong(bucketWidths, dir,
-        s"${spark.sparkContext.applicationId}|$dir|$family", fp)(widest)
+      val w = bucketWidth(spark, dir, family, fp)(widest)
       if (w * slack <= cap) 0 else cap
     }
   }
 
   private def maxBucketWidth(
       spark: SparkSession, dir: String, bandBits: Int, fp: String): Long =
-    // bandBits folds into the VERSION half of the key so a geometry change
-    // (corpus crossing a band-bit boundary) also evicts the stale entry.
-    // The prefix carries an explicit `|embed` family marker: cachedLong
-    // evicts every same-prefix sibling on each call, and a bare
-    // `app|dir` prefix is a string-prefix of the text families'
-    // `app|dir|simhash` etc., so without the marker every embed probe
-    // evicted the text probes and pushed them back into the per-query
-    // path (caught by the r13 shuffle audit re-measure).
-    cachedLong(bucketWidths, dir,
-      s"${spark.sparkContext.applicationId}|$dir|embed",
-      s"$bandBits|$fp") {
+    // bandBits folds into the VERSION so a geometry change (corpus
+    // crossing a band-bit boundary) also replaces the stale entry
+    bucketWidth(spark, dir, "embed", s"$bandBits|$fp") {
       val planes = EmbedBands * bandBits
       Tables.embeddings(spark, dir)
         .select(posexplode(VectorOps.bandKeys(
@@ -1004,7 +973,8 @@ object Dedup {
       spark: SparkSession, dir: String, dfp: String): Int = {
     val cap = embedBucketCap(spark)
     if (cap > 0 &&
-      maxBucketWidth(spark, dir, embedBandBits(embedCount(spark, dir, dfp)),
+      maxBucketWidth(spark, dir,
+        embedBandBits(Tables.cachedCount(spark, dir, "embeddings", dfp)),
         dfp) <= cap) 0
     else cap
   }
@@ -1014,7 +984,7 @@ object Dedup {
     * invisible in the steady TakeOrdered-over-artifact plan). */
   private[graft] def embedPairsBuild(
       spark: SparkSession, dir: String, dfp: String, cap: Int): DataFrame = {
-    val n = embedCount(spark, dir, dfp)
+    val n = Tables.cachedCount(spark, dir, "embeddings", dfp)
     // cast below the exchange: the double arrays materialize once and the
     // three consumers (banding + two join-backs) reuse the exchange
     val vecs = Tables.embeddings(spark, dir)

@@ -1,12 +1,11 @@
 package graft.operators
 
 import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{Layout, Tables}
+import graft.sources.{Layout, SessionCache, Tables}
 
 /** Incrementally-maintained on-disk passage store — the (50-token
   * shingle-hash, source, doc_id, n_occ, preview) table behind
@@ -60,9 +59,6 @@ object PassageStore {
     * a spec cannot hit otherwise — the CompactionSpec crash-hook pattern).
     */
   private[graft] var testBeforeDeltaCommit: Int => Unit = _ => ()
-
-  /** Ensure-once guard per (family, corpus version) per JVM. */
-  private val ensured = new ConcurrentHashMap[String, String]()
 
   private def root(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.text.indexRoot")
@@ -122,12 +118,14 @@ object PassageStore {
       spark.read.schema(RowsSchema).parquet(deltaRows: _*))
   }
 
+  /** Ensure once per (session, family, corpus version): a
+    * [[SessionCache.memo]] entry, so the build runs outside every map
+    * lock and a new corpus version is a miss that re-diffs the store. */
   def ensure(spark: SparkSession, dir: String, fp: String): String = {
     val fam = s"${root(spark)}/passages_${dirFamily(dir)}"
-    if (ensured.size > 4096) ensured.clear() // superseded-version strings
-    ensured.computeIfAbsent(s"$fam|$fp", _ => {
+    SessionCache.memo(spark, dir, fp, s"passages|$fam") {
       ensureImpl(spark, dir, fp, fam); fam
-    })
+    }
   }
 
   /** Corpus data files as (path, bytes, mtime) — the coverage identity. */

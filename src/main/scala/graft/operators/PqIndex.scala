@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.ConcurrentHashMap
+import graft.sources.SessionCache
 
 /** Product-quantization serving store — the compression tier past int8.
   *
@@ -58,30 +57,21 @@ object PqIndex {
   def rerank(spark: SparkSession): Int =
     spark.conf.get("spark.graft.ann.pqRerank", DefaultRerank.toString).toInt
 
-  // flattened codebooks ([j][c][t] layout) per (dir, corpus version),
-  // with an insertion tick for superseded-version eviction
-  private val cbCache = new ConcurrentHashMap[String, (Long, Array[Double])]()
-  private val cbTick = new java.util.concurrent.atomic.AtomicLong()
-
   /** Deterministic per-subspace codebooks for the corpus at `dir`,
-    * flattened to the `pq_encode`/`pq_adc` layout. */
+    * flattened to the `pq_encode`/`pq_adc` layout ([j][c][t]). One
+    * [[SessionCache.memo]] entry per (session, dir): a new corpus version
+    * replaces the old codebook, and the training job runs outside every
+    * map lock. */
   def codebooks(
-      spark: SparkSession, dir: String, version: String): Array[Double] = {
-    val key = s"$dir|$version"
-    val entry = cbCache.computeIfAbsent(key, _ => cbTick.incrementAndGet() -> {
+      spark: SparkSession, dir: String, version: String): Array[Double] =
+    SessionCache.memo(spark, dir, version, "pq.codebooks") {
       val sample: Array[Array[Double]] =
         AnnIndex.kmeansSample(spark, dir, TrainSample)
           .dropDuplicates("vec_id")
           .orderBy(xxhash64(col("vec_id"), lit(42)), col("vec_id"))
           .collect().map(_.getSeq[Double](1).toArray)
       train(sample)
-    })
-    val mine = new scala.collection.mutable.ArrayBuffer[
-      (String, (Long, Array[Double]))]()
-    cbCache.forEach((k, v) => if (k.startsWith(s"$dir|")) mine += (k -> v))
-    mine.sortBy(-_._2._1).drop(2).foreach { case (k, v) => cbCache.remove(k, v) }
-    entry._2
-  }
+    }
 
   /** Per-subspace Lloyd over the normalized sample; pure function of
     * the sample order (seeded init = first ksub DISTINCT subvectors,

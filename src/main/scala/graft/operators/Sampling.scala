@@ -329,34 +329,20 @@ object Sampling {
     }
   }
 
-  /** [[capHist]]'s row count, cached per (app, corpus version) — ONE
-    * in-memory count over the checkpointed artifact per generation (the
-    * Dedup cachedLong discipline, family marker `caphist`), feeding the
-    * regime guard on the per-source card broadcasts: SOURCES grow with
-    * the corpus (web domains at 100 TB), so boundary/tie frames can't
-    * carry unconditional broadcast hints any more than the lm vocabulary
+  /** [[capHist]]'s row count, one [[SessionCache.memo]] entry per
+    * (session, corpus version) — ONE in-memory count over the
+    * checkpointed artifact per generation, feeding the regime guard on
+    * the per-source card broadcasts: SOURCES grow with the corpus (web
+    * domains at 100 TB), so boundary/tie frames can't carry
+    * unconditional broadcast hints any more than the lm vocabulary
     * could. Boundary/tie rows ≤ sources ≤ histogram rows, making this an
-    * upper bound in the safe direction.
+    * upper bound in the safe direction. The count is a full Spark job
+    * when cap_hist is gated off past maxRows; the memo runs it outside
+    * every map lock.
     */
-  /** Lazy count holder — the SessionCache.Memo latch idiom, NOT
-    * `computeIfAbsent(_ => histC.count())`: the count is a full Spark job
-    * (a verdict+histogram pipeline when cap_hist is gated off past
-    * maxRows), and running it inside computeIfAbsent would hold the map's
-    * bin lock for the job's duration, blocking concurrent first-touch
-    * callers on the lock instead of the latch. */
-  private final class CountMemo(f: () => Long) { lazy val get: Long = f() }
-  private val capHistCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, CountMemo]()
   private def capHistRows(
-      spark: SparkSession, dir: String, dfp: String, histC: => DataFrame): Long = {
-    val prefix = s"${spark.sparkContext.applicationId}|$dir|caphist"
-    val key = s"$prefix|$dfp"
-    if (capHistCounts.keySet.removeIf(k => k.startsWith(s"$prefix|") && k != key))
-      Tables.invalidate(dir)
-    val holder = new CountMemo(() => histC.count())
-    val prior = capHistCounts.putIfAbsent(key, holder)
-    (if (prior != null) prior else holder).get
-  }
+      spark: SparkSession, dir: String, dfp: String, histC: => DataFrame): Long =
+    SessionCache.memo(spark, dir, dfp, "sampling.caphist_rows")(histC.count())
 
   /** Conservative broadcast bytes per per-source card row (source string
     * + two numbers + hash-relation entry overhead). */

@@ -1105,16 +1105,16 @@ object Similarity {
     // ONLY the card measured under the CURRENT conf counts (same key
     // components as annRecall: assignTag + rerank + nprobe) — after an
     // nprobe/seed A/B the session can hold several ann_recall_* cards and
-    // peekPrefix's lexicographic-max pick would apply a superseded
+    // a lexicographic-max pick over them would apply a superseded
     // geometry's floor (r21 ADVICE). peekAssignTag, not assignTag: the
     // advisor must never train a codebook itself, so the exact key
     // resolves only when the current conf's codebook is already in the
     // JVM (whenever annRecall measured under this conf, it is).
-    // NO prefix fallback (r22, r21 ADVICE #4): centroidCache retains only
-    // the 2 newest codebooks per dir, so a 3-geometry A/B can evict the
-    // current conf's codebook while a stale card survives — the fallback
-    // then served exactly the superseded-geometry floor this exact-key
-    // path exists to prevent. An unmeasured conf now gets cost-only
+    // NO prefix fallback (r22, r21 ADVICE #4): the current conf's
+    // codebook can be missing (never trained, replaced by a new corpus
+    // version, or evicted by the store's bound) while a stale card
+    // survives — a fallback would serve exactly the superseded-geometry
+    // floor this exact-key path exists to prevent. An unmeasured conf now gets cost-only
     // eligibility (every non-exact tier needs a measured recall to clear
     // the floor), which degrades CONSERVATIVELY: the advisor routes to
     // exact rather than onto a tier whose recall it cannot vouch for.
@@ -1122,7 +1122,7 @@ object Similarity {
       AnnIndex.peekAssignTag(spark, dir, ver).flatMap { tag =>
         val k = s"ann_recall_${tag}_r${PqIndex.rerank(spark)}" +
           s"_np${AnnIndex.probeCount(spark, AnnIndex.centroids(spark, dir, ver).size)}"
-        SessionCache.peek(spark, k, dir, ver)
+        SessionCache.peek[DataFrame](spark, k, dir, ver)
       }
         .map(_.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
         .getOrElse(Map.empty)

@@ -31,8 +31,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    one metadata listing, measured 0.7–0.9 ms on local FS; on an
   *    object store this is the same class of listing any staleness
   *    check pays), so external appends/overwrites rebuild the plan,
-  *    and a superseded fingerprint eagerly invalidates [[Tables]]'
-  *    pinned listings for the dir;
+  *    and a superseded fingerprint invalidates [[Tables]]' pinned
+  *    listings for the dir;
   *  - a conf signature over every `spark.graft.*` entry plus the
   *    spark.sql confs that bind BEFORE execution: at build time
   *    (`spark.sql.autoBroadcastJoinThreshold`, read by
@@ -47,21 +47,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    The signature is the FULL sorted conf string, not a hash — a
   *    32-bit hashCode collision between two conf states would silently
   *    serve the wrong plan (the same reason AnnIndex.dirFamily rejects
-  *    String.hashCode for key identity); keys are bounded by the 4096
-  *    cap, so the longer string costs nothing that matters.
+  *    String.hashCode for key identity); keys are bounded by the
+  *    store's [[SessionCache.MaxEntries]], so the longer string costs
+  *    nothing that matters.
   *
-  * Keyed by session identity like [[SessionCache]]; build-once under
-  * concurrency via the same unevaluated-Memo publish. Disable with
-  * `spark.graft.planCache=false` (the A/B lever — BASELINE.md carries
-  * the measured delta).
+  * An entry of the [[SessionCache.memo]] store, named by the query and
+  * the conf signature and versioned by the corpus fingerprint: keyed by
+  * session identity, built once under concurrency, replaced (with the
+  * catalog's listings invalidated) when the fingerprint moves. Disable
+  * with `spark.graft.planCache=false` (the A/B lever — BASELINE.md
+  * carries the measured delta).
   */
 object PlanCache {
-  private final class Memo(build: () => DataFrame) {
-    lazy val get: DataFrame = build()
-  }
-
-  private val cache = new ConcurrentHashMap[(String, String), Memo]()
-
   /** Diagnostic build counter (specs): builds, not hits. */
   private[graft] val buildLog = ConcurrentHashMap.newKeySet[String]()
 
@@ -92,29 +89,15 @@ object PlanCache {
   def cached(spark: SparkSession, name: String, dir: String)
       (build: => DataFrame): DataFrame = {
     if (!enabled(spark)) return build
-    val appId = spark.sparkContext.applicationId
-    val sessionKey = s"$appId/${System.identityHashCode(spark)}"
     val fp = SessionCache.dirFingerprint(spark, dir)
-    val prefix = s"$name|$dir|"
-    val fpPrefix = s"$prefix$fp|"
-    val key = (sessionKey, s"$fpPrefix${confSignature(spark)}")
-    // a superseded FINGERPRINT means the directory mutated under pinned
-    // catalog listings — drop the stale plans and invalidate the
-    // listings so the rebuild reads the post-mutation file set (the
-    // SessionCache discipline). Same-fingerprint plans under OTHER conf
-    // signatures stay resident: a knob flip-flop (a spec A/B, a service
+    // Same-fingerprint plans under OTHER conf signatures are other names,
+    // so they stay resident: a knob flip-flop (a spec A/B, a service
     // serving both profile modes) must not thrash the cache.
-    if (cache.keySet.removeIf(k => k._1 == sessionKey &&
-        k._2.startsWith(prefix) && !k._2.startsWith(fpPrefix)))
-      Tables.invalidate(dir)
-    if (cache.size > 4096) cache.clear() // bound under many (dir, conf) keys
-    val holder = new Memo(() => {
+    val sig = confSignature(spark)
+    SessionCache.memo(spark, dir, fp, s"plan|$name|$sig") {
       if (buildLog.size > 16384) buildLog.clear()
-      buildLog.add(key._2) // full key: conf-variant builds count apart
+      buildLog.add(s"$name|$dir|$fp|$sig") // conf-variant builds count apart
       build
-    })
-    val prior = cache.putIfAbsent(key, holder)
-    // fresh Dataset per call: reuse the PLAN, re-run the EXECUTION
-    (if (prior != null) prior else holder).get.select("*")
+    }.select("*") // fresh Dataset per call: reuse the PLAN, re-run the EXECUTION
   }
 }

@@ -12,8 +12,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * language-ID bigram profiles, the verified near-dup edge set shared by
   * `q_dedup_minhash` and `q_dedup_clusters`, the simhash fingerprint frame.
   * Recomputing them per call multiplies the dominant stage of each query.
-  * Entries are keyed by (session UUID, artifact, data dir, data fingerprint)
-  * and materialized with an eager `localCheckpoint`:
+  *
+  * ONE store holds every derived value of the engine ([[memo]]): these
+  * checkpointed frames, the prepared plans ([[PlanCache]]), and the
+  * driver values the operators derive per corpus version (row counts,
+  * codebooks, pivot groups, query bands/vectors, candidate pools,
+  * on-disk index ensures and their resolved frames). One key, one
+  * supersession rule, one bound, one lifecycle listener.
+  *
+  * Frame artifacts ([[cached]]) are materialized with an eager
+  * `localCheckpoint`:
   *   - truncates lineage, so iterative consumers (label propagation) don't
   *     re-trigger the producing job — and acts as a PUSHDOWN BARRIER:
   *     nothing downstream can be rewritten below the artifact's compute;
@@ -22,14 +30,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - is session-tied, which the key mirrors, so a new session never sees
   *     another session's blocks.
   *
-  * Staleness: the key folds in a fingerprint of the input directory's file
-  * listing (paths, sizes, mtimes — one metadata listing, no data I/O), so
-  * data appended to the same dir within a session gets a fresh artifact
-  * instead of silently serving stale dedup/langid results. `invalidate`
-  * drops a dir's entries eagerly for write paths that want to reclaim the
-  * blocks immediately. Lifecycle: a SparkListener evicts a session's
-  * entries on application end, so a long-lived multi-session process does
-  * not grow without bound.
+  * Staleness: each entry carries the version it was derived from — for
+  * artifacts a fingerprint of the input directory's file listing (paths,
+  * sizes, mtimes — one metadata listing, no data I/O), so data appended
+  * to the same dir within a session gets a fresh artifact instead of
+  * silently serving stale dedup/langid results. `invalidate` drops a
+  * dir's entries eagerly for write paths that want to reclaim the blocks
+  * immediately. Lifecycle: a SparkListener evicts a session's entries on
+  * application end, and [[MaxEntries]] bounds the store under session
+  * churn.
   *
   * On a long-lived 1000-executor service this is the "profile store": train
   * once, serve many. Size discipline: only frames that are orders of
@@ -37,27 +46,53 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * belong here.
   */
 object SessionCache {
-  /** Lazy build holder: `putIfAbsent` publishes the UNEVALUATED holder,
-    * so exactly one thread (the first `get` caller) runs the build —
-    * outside any map lock, which keeps NESTED builds legal (the near-dup
-    * label artifact builds the minhash-pair artifact inside its own
-    * build; `computeIfAbsent` forbids that reentrant insert) while
-    * closing the get-then-putIfAbsent first-touch race where two
-    * concurrent queries both ran the build and the loser's eager
-    * checkpoint blocks stayed pinned until GC + ContextCleaner.
+  /** Lazy build holder: the store publishes the UNEVALUATED holder, so
+    * exactly one thread (the first `get` caller) runs the build — outside
+    * any map lock, which keeps NESTED builds legal (the near-dup label
+    * artifact builds the minhash-pair artifact inside its own build;
+    * `computeIfAbsent` forbids that reentrant insert) and keeps a Spark
+    * job from holding a map bin lock for its whole length, while closing
+    * the first-touch race where two concurrent queries both ran the build
+    * and the loser's eager checkpoint blocks stayed pinned until GC +
+    * ContextCleaner. `ready` lets [[peek]] stay non-building.
     */
-  private final class Memo(build: () => DataFrame) {
-    lazy val get: DataFrame = build()
+  private final class Memo(build: () => Any) {
+    @volatile private[this] var ready = false
+    lazy val get: Any = { val v = build(); ready = true; v }
+    def peek: Option[Any] = if (ready) Some(get) else None
   }
 
-  private val cache = new ConcurrentHashMap[(String, String), Memo]()
+  /** One store entry: the version its value was derived from, its
+    * insertion tick (the bound's eviction order), and the holder. */
+  private final class Entry(val version: String, val tick: Long, val memo: Memo)
+
+  /** (session identity, dir, name). Session identity is applicationId +
+    * identityHashCode of the session object: localCheckpoint blocks live
+    * on the session's executors, so a different/new session must never
+    * hit. Known trade-off (here and in Tables.resolved): identityHashCode
+    * is 32-bit and could in principle collide between a live session and
+    * a GC'd one under the same applicationId — accepted because a
+    * collision needs both hash equality AND appId equality.
+    */
+  private type Key = (String, String, String)
+
+  private val store = new ConcurrentHashMap[Key, Entry]()
+  private val ticks = new java.util.concurrent.atomic.AtomicLong()
   private val hooked = ConcurrentHashMap.newKeySet[String]()
 
+  /** The store's one size bound: past it the OLDEST entry (lowest
+    * insertion tick) is evicted, never the one just inserted. An evicted
+    * entry costs one rebuild on its next touch, never a wrong answer.
+    * A cold pass over all 64 curation queries at sf0.1 leaves 122
+    * entries (64 of them plans), so the benchmark never evicts.
+    */
+  private[graft] val MaxEntries = 4096
+
   /** Diagnostic ledger of artifact BUILDS (not hits): one
-    * `artifact|dir|fingerprint` entry per executed build. Powers the
-    * table-driven mutation-pin matrix (ArtifactMatrixSpec): after a
-    * corpus mutation, every inventoried artifact family must log a
-    * build under the NEW fingerprint, and every logged name must match
+    * `artifact|dir|fingerprint` entry per executed [[cached]] build.
+    * Powers the table-driven mutation-pin matrix (ArtifactMatrixSpec):
+    * after a corpus mutation, every inventoried artifact family must log
+    * a build under the NEW fingerprint, and every logged name must match
     * an inventoried family — a new `cached` call site without a
     * SCALING.md row + matrix pin fails the spec loudly. Bounded: one
     * small string per build; cleared when it outgrows any plausible
@@ -65,44 +100,118 @@ object SessionCache {
     */
   private[graft] val buildLog = ConcurrentHashMap.newKeySet[String]()
 
+  private def sessionKey(spark: SparkSession): String =
+    s"${spark.sparkContext.applicationId}/${System.identityHashCode(spark)}"
+
+  /** The session memo every derived artifact goes through: one entry per
+    * (session, `dir`, `name`) holding the value derived from `dir` at
+    * `version` (a corpus fingerprint, an index version). Variants of one
+    * family — a conf signature, k, a tag, a vec id — go into `name`.
+    *  - hit (same version): the stored value, no scan;
+    *  - miss or new version: the entry is REPLACED, and replacing another
+    *    version means the directory mutated, so the catalog's pinned file
+    *    listing for it is invalidated ([[Tables.invalidate]]) before the
+    *    build can read it;
+    *  - the build runs once, outside every map lock (see [[Memo]]).
+    * Dropping the map reference is the release mechanism for
+    * checkpointed frames: Spark's ContextCleaner unpersists RDD blocks
+    * whose references are garbage-collected.
+    */
+  def memo[T](spark: SparkSession, dir: String, version: String, name: String)
+      (build: => T): T =
+    entry(spark, dir, version, name)(build).memo.get.asInstanceOf[T]
+
+  private def entry(spark: SparkSession, dir: String, version: String,
+                    name: String)(build: => Any): Entry = {
+    val key = (sessionKey(spark), dir, name)
+    val cur = store.get(key)
+    if (cur != null && cur.version == version) cur
+    else {
+      hook(spark)
+      var inserted = false
+      // the remapping function only constructs the unevaluated holder
+      // (and drops a pinned listing), so no build ever runs under the lock
+      val e = store.compute(key, (_, old) =>
+        if (old != null && old.version == version) old
+        else {
+          if (old != null) Tables.invalidate(dir)
+          inserted = true
+          new Entry(version, ticks.incrementAndGet(), new Memo(() => build))
+        })
+      if (inserted && store.size > MaxEntries) evictOldest(key)
+      e
+    }
+  }
+
+  /** As [[memo]] for a SET of names whose misses are fetched together:
+    * every miss is registered (and any superseded version invalidated)
+    * first, then the first holder evaluated runs `fetch` ONCE over all
+    * the misses — one bounded job instead of one per name.
+    */
+  private[graft] def memoAll[T](
+      spark: SparkSession, dir: String, version: String, names: Seq[String])(
+      fetch: Seq[String] => Map[String, T]): Map[String, T] = {
+    val distinct = names.distinct
+    val missing = distinct.filterNot(n => peek[T](spark, n, dir, version).isDefined)
+    lazy val fetched = fetch(missing)
+    val entries = distinct.map(n => n -> entry(spark, dir, version, n)(fetched(n)))
+    entries.map { case (n, e) => n -> e.memo.get.asInstanceOf[T] }.toMap
+  }
+
+  private def evictOldest(keep: Key): Unit =
+    while (store.size > MaxEntries) {
+      var oldest: java.util.Map.Entry[Key, Entry] = null
+      store.entrySet.forEach { e =>
+        if (e.getKey != keep && (oldest == null || e.getValue.tick < oldest.getValue.tick))
+          oldest = e
+      }
+      if (oldest == null) return
+      store.remove(oldest.getKey, oldest.getValue)
+    }
+
+  // ONE listener per application: a per-session listener on the shared
+  // bus would accumulate without bound under newSession() churn
+  private def hook(spark: SparkSession): Unit = {
+    val appId = spark.sparkContext.applicationId
+    if (hooked.add(appId)) {
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          store.keySet.removeIf(_._1.startsWith(appId + "/"))
+          hooked.remove(appId)
+          ()
+        }
+      })
+    }
+  }
+
+  /** Non-building probe: the value stored under `name` for this (session,
+    * dir, version) if it is ALREADY built, else None — nothing is built.
+    * For consumers that reconcile with a measurement that happens to
+    * exist and must know the current conf's exact key (tierAdvisor × the
+    * ann_recall card: the advisor must never trigger the five store
+    * builds the card's own build needs, and must read the card measured
+    * under the CURRENT geometry, never another one the session holds).
+    */
+  def peek[T](spark: SparkSession, name: String,
+              dir: String, version: String): Option[T] =
+    Option(store.get((sessionKey(spark), dir, name)))
+      .filter(_.version == version)
+      .flatMap(_.memo.peek).map(_.asInstanceOf[T])
+
+  /** Names of this process's live entries (all sessions) — spec seam. */
+  private[graft] def names: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    store.keySet.asScala.map(_._3).toSet
+  }
+
+  /** Live entry count (all sessions) — spec seam and bound evidence. */
+  private[graft] def size: Int = store.size
+
+  /** A checkpointed frame artifact: a [[memo]] entry named `artifact`,
+    * versioned by the directory's fingerprint, logged in [[buildLog]]. */
   def cached(spark: SparkSession, artifact: String, dir: String)
       (build: => DataFrame): DataFrame =
     cached(spark, artifact, dir, dirFingerprint(spark, dir))(build)
-
-  /** Non-building probe: a cached artifact whose name starts with
-    * `artifactPrefix` under this (session, dir, fingerprint), if the
-    * session has ALREADY built one — else None, and nothing is built.
-    * For consumers that reconcile with a measurement that happens to
-    * exist (r20: tierAdvisor × the ann_recall card — the advisor must
-    * never trigger the five store builds the card's own build needs).
-    * Deterministic under multiple matches (max key).
-    */
-  /** Non-building EXACT-key probe: the cached artifact named `artifact`
-    * under this (session, dir, fingerprint) if already built, else None.
-    * For consumers that know the current conf's key (r21 ADVICE:
-    * tierAdvisor must prefer the card measured under the CURRENT geometry
-    * over peekPrefix's lexicographic-max pick when both exist — after an
-    * nprobe/seed A/B the session can hold several ann_recall_* cards and
-    * "np16" sorts above "np4").
-    */
-  def peek(spark: SparkSession, artifact: String,
-           dir: String, fp: String): Option[DataFrame] = {
-    val sessionKey =
-      s"${spark.sparkContext.applicationId}/${System.identityHashCode(spark)}"
-    Option(cache.get((sessionKey, s"$artifact|$dir|$fp"))).map(_.get)
-  }
-
-  def peekPrefix(spark: SparkSession, artifactPrefix: String,
-                 dir: String, fp: String): Option[DataFrame] = {
-    val sessionKey =
-      s"${spark.sparkContext.applicationId}/${System.identityHashCode(spark)}"
-    val suffix = s"|$dir|$fp"
-    import scala.jdk.CollectionConverters._
-    cache.entrySet().asScala
-      .filter(e => e.getKey._1 == sessionKey &&
-        e.getKey._2.startsWith(artifactPrefix) && e.getKey._2.endsWith(suffix))
-      .toSeq.sortBy(_.getKey._2).lastOption.map(_.getValue.get)
-  }
 
   /** As [[cached]] with the corpus fingerprint precomputed by the caller —
     * the same resolve-once-and-thread discipline as AnnIndex's
@@ -112,56 +221,12 @@ object SessionCache {
     * q_dedup_incremental regression was exactly one extra listing).
     */
   def cached(spark: SparkSession, artifact: String, dir: String, fp: String)
-      (build: => DataFrame): DataFrame = {
-    // identity of the session object: localCheckpoint blocks live on the
-    // session's executors, so a different/new session must never hit.
-    // Known trade-off (here, Tables.resolved, AnnIndex.resolved):
-    // identityHashCode is 32-bit and could in principle collide between a
-    // live session and a GC'd one under the same applicationId — accepted
-    // because a collision needs both hash equality AND appId equality,
-    // and the alternative (identity-keyed weak map) adds locking for a
-    // failure mode never observed; revisit if sessions are churned at
-    // scale.
-    val appId = spark.sparkContext.applicationId
-    val sessionKey = s"$appId/${System.identityHashCode(spark)}"
-    // ONE listener per application: a per-session listener on the shared
-    // bus would accumulate without bound under newSession() churn
-    if (hooked.add(appId)) {
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-          cache.keySet.removeIf(k => k._1.startsWith(appId + "/"))
-          hooked.remove(appId)
-          ()
-        }
-      })
-    }
-    val prefix = s"$artifact|$dir|"
-    val key = (sessionKey, s"$prefix$fp")
-    // drop superseded-fingerprint entries for the same artifact BEFORE
-    // inserting: a stale entry would otherwise pin its checkpoint blocks
-    // for the application's lifetime. Dropping the map reference is the
-    // release mechanism — Spark's ContextCleaner unpersists RDD blocks
-    // whose references are garbage-collected.
-    val superseded = cache.keySet.removeIf(k =>
-      k._1 == sessionKey && k._2.startsWith(prefix) && k != key)
-    // a superseded fingerprint means the DIRECTORY mutated: the catalog's
-    // resolved plan pins the old file listing, so the rebuild below would
-    // otherwise read the pre-mutation file set and rebuild a stale artifact
-    if (superseded) Tables.invalidate(dir)
-    // putIfAbsent of an UNEVALUATED lazy holder (see [[Memo]]): the map
-    // mutation is build-free, so nested artifact builds never mutate the
-    // map reentrantly (the computeIfAbsent "Recursive update" flake), and
-    // the lazy-val latch means exactly ONE thread runs the build — no
-    // duplicate warm-up job, no orphaned checkpoint blocks under the
-    // concurrent bench lap.
-    val holder = new Memo(() => {
+      (build: => DataFrame): DataFrame =
+    memo(spark, dir, fp, artifact) {
       if (buildLog.size > 16384) buildLog.clear()
-      buildLog.add(s"$prefix$fp")
+      buildLog.add(s"$artifact|$dir|$fp")
       build.localCheckpoint(eager = true)
-    })
-    val prior = cache.putIfAbsent(key, holder)
-    (if (prior != null) prior else holder).get
-  }
+    }
 
   /** Default ceiling for CORPUS-ROW-SIZED artifacts (one slim row per
     * document — langid scores, LM scores, filter verdicts): ~10⁹ rows is
@@ -211,10 +276,7 @@ object SessionCache {
       // only cached() runs the superseded-prefix drop, and skipping it
       // here would leave the old O(corpus)-row checkpoint pinned for the
       // application lifetime: the exact pinning the gate exists to stop
-      val sessionKey =
-        s"${spark.sparkContext.applicationId}/${System.identityHashCode(spark)}"
-      cache.keySet.removeIf(k =>
-        k._1 == sessionKey && k._2.startsWith(s"$artifact|$dir|"))
+      store.remove((sessionKey(spark), dir, artifact))
       build
     } else cached(spark, artifact, dir, fp)(compacted(build, compactBy))
   }
@@ -271,22 +333,28 @@ object SessionCache {
       // same release discipline as cachedBounded's gate crossing: drop any
       // previously cached generation so the old session-pinned checkpoint
       // does not outlive the ceiling
-      val sessionKey =
-        s"${spark.sparkContext.applicationId}/${System.identityHashCode(spark)}"
-      cache.keySet.removeIf(k =>
-        k._1 == sessionKey && k._2.startsWith(s"$artifact|$dir|"))
+      store.remove((sessionKey(spark), dir, artifact))
       build.localCheckpoint(true)
     } else cached(spark, artifact, dir, fp)(compacted(build, compactBy))
   }
 
-  /** Drop every cached artifact derived from `dir` (all sessions): write
+  /** Drop every entry derived from `dir` (all sessions, every family:
+    * artifacts, plans, counts, codebooks, pools, index ensures): write
     * paths call this after mutating a directory; the dropped references
     * let ContextCleaner reclaim the checkpoint blocks on the next GC
     * rather than waiting for the fingerprint to age them out.
     */
   def invalidate(dir: String): Unit = {
-    cache.keySet.removeIf(k => k._2.contains(s"|$dir|"))
+    store.keySet.removeIf(_._2 == dir)
     Tables.invalidate(dir)
+  }
+
+  /** Drop every entry whose (name, version) matches — for releases keyed
+    * by what an entry points at rather than by its source dir (a
+    * resolved index frame over a path rewritten in place). */
+  private[graft] def invalidateWhere(p: (String, String) => Boolean): Unit = {
+    store.entrySet.removeIf(e => p(e.getKey._3, e.getValue.version))
+    ()
   }
 
   /** Listing-fallback counter, exposed for the StoreVersionSpec assertion
@@ -368,5 +436,5 @@ object SessionCache {
   }
 
   /** Tests only: drop everything (e.g. between suites sharing a session). */
-  private[graft] def clear(): Unit = cache.clear()
+  private[graft] def clear(): Unit = store.clear()
 }

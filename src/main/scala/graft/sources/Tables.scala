@@ -43,8 +43,8 @@ object Tables {
     * DataFrame pins its file-listing snapshot (Spark semantics: external
     * appends need REFRESH TABLE) — so the staleness detectors call this
     * when they see a directory's fingerprint change
-    * ([[SessionCache.cached]] superseded-entry eviction,
-    * [[SessionCache.invalidate]], the dedup probe caches): without it an
+    * ([[SessionCache.memo]]'s superseded-version replace,
+    * [[SessionCache.invalidate]]): without it an
     * artifact rebuild triggered by the mutation would re-read the OLD
     * listing and rebuild an identical stale artifact.
     */
@@ -53,16 +53,14 @@ object Tables {
     ()
   }
 
-  /** Cached row count of one table, one count job per (app, dir, table,
-    * corpus version) — what the corpus-row-sized-artifact gate
-    * ([[SessionCache.cachedBounded]]) sizes against. Same
-    * superseded-version discipline as the Dedup/AnnIndex count caches: a
-    * fingerprint change drops the stale entry AND invalidates the pinned
-    * resolved plan, so the recount sees the post-mutation file set.
+  /** Cached row count of one table, one count job per (session, dir,
+    * table, corpus version) — what the corpus-row-sized-artifact gate
+    * ([[SessionCache.cachedBounded]]) and both index geometries (IVF
+    * pivot count, LSH and embed-dedup band bits) size against. A
+    * [[SessionCache.memo]] entry: a fingerprint change replaces it AND
+    * invalidates the pinned resolved plan, so the recount sees the
+    * post-mutation file set.
     */
-  private val rowCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   def cachedCount(spark: SparkSession, dir: String, name: String): Long =
     cachedCount(spark, dir, name, SessionCache.dirFingerprint(spark, dir))
 
@@ -70,13 +68,8 @@ object Tables {
     * (the resolve-once-per-query discipline — see
     * [[SessionCache.cached]]). */
   def cachedCount(
-      spark: SparkSession, dir: String, name: String, fp: String): Long = {
-    val prefix = s"${spark.sparkContext.applicationId}|$dir|$name|"
-    val key = s"$prefix$fp"
-    if (rowCounts.keySet.removeIf(k => k.startsWith(prefix) && k != key))
-      invalidate(dir)
-    rowCounts.computeIfAbsent(key, _ => apply(spark, dir, name).count())
-  }
+      spark: SparkSession, dir: String, name: String, fp: String): Long =
+    SessionCache.memo(spark, dir, fp, s"count|$name")(apply(spark, dir, name).count())
 
   /** Scan-spread, made adaptive: repartition ONLY when the input arrives
     * in fewer partitions than cores. The single-file local testdata gives

@@ -191,6 +191,31 @@ class AnnIndexSpec extends SparkSpec {
     assert(Files.exists(Paths.get(path3.stripPrefix("file:"), "_SUCCESS")))
   }
 
+  test("a pivots A/B flipping back to a retain-one-evicted index rebuilds it (16 → 20 → 24 → 16)") {
+    // building the 24-pivot inverted file evicts the 16-pivot one from
+    // disk (retain-one keeps only the 20); the flip back must re-check the
+    // _SUCCESS marker and rebuild, not serve the deleted path
+    // (PATH_NOT_FOUND)
+    import graft.operators.Similarity
+    val corpus = Files.createTempDirectory("ann_pivot_flip")
+    Files.copy(Paths.get(s"$sf/embeddings.parquet"),
+      corpus.resolve("embeddings.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    val root = Files.createTempDirectory("ann_pivot_flip_root").toString
+    spark.conf.set("spark.graft.ann.indexRoot", root)
+    try {
+      val answers = Seq(16, 20, 24, 16).map { k =>
+        spark.conf.set("spark.graft.ann.pivots", k.toString)
+        Similarity.simAnnIvf(spark, corpus.toString).collect().toSeq
+      }
+      assert(answers.head.nonEmpty)
+      assert(answers.last == answers.head,
+        "the rebuilt 16-pivot index must serve the first 16-pivot answer")
+    } finally {
+      spark.conf.unset("spark.graft.ann.pivots")
+      spark.conf.unset("spark.graft.ann.indexRoot")
+    }
+  }
+
   test("a pure-ANN flow re-indexes appended rows after a corpus mutation") {
     // embeddings.parquet as a DIRECTORY so a crawl drop can be appended —
     // the 100 TB layout. The catalog pins the resolved file listing; with
@@ -888,7 +913,8 @@ class AnnIndexSpec extends SparkSpec {
       val kOver = AnnIndex.centroids(spark, sf, ver).size
       assert(kOver == 20 && AnnIndex.assignTag(spark, sf, ver).contains("-k20-c"))
     } finally spark.conf.unset("spark.graft.ann.pivots")
-    // law codebook still resident after the A/B (retain-2 eviction)
+    // law codebook still resident after the A/B: k is in the codebook's
+    // store name, so each k keeps its own entry
     assert(AnnIndex.centroids(spark, sf, ver).size == kLaw)
   }
 

@@ -94,6 +94,19 @@ class ContractSpec extends SparkSpec {
       s"README lists mains that do not exist: ${(listed -- defined).toSeq.sorted}")
   }
 
+  test("operators hold no cache maps of their own: derived values go through SessionCache.memo") {
+    // operator-local caches each grew their own key encoding, supersession
+    // drop, bound and build latch; one store keeps one discipline
+    import scala.jdk.CollectionConverters._
+    val decl = "new (java\\.util\\.concurrent\\.)?ConcurrentHashMap\\[|newKeySet\\[".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/operators"))
+    val offenders = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      decl.findAllMatchIn(src).map(m => s"${f.getFileName}:${src.take(m.start).count(_ == '\n') + 1}")
+    }.toList finally walk.close()
+    assert(offenders.isEmpty, s"operator-local concurrent maps: ${offenders.mkString(", ")}")
+  }
+
   test("entry returns >0 rows at sf0.001 (driver smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

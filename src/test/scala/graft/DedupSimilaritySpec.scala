@@ -570,8 +570,7 @@ class DedupSimilaritySpec extends SparkSpec {
     import graft.operators.AnnIndex
     // Measure the card under TWO nprobe geometries in one session, then
     // ask the advisor under each conf in turn: it must surface the card
-    // measured under the CURRENT conf — peekPrefix's lexicographic max
-    // would pin whichever key string sorts last (e.g. "np16" < "np4"),
+    // measured under the CURRENT conf — a lexicographic-max pick would pin whichever key string sorts last (e.g. "np16" < "np4"),
     // applying a superseded geometry's floor after an A/B.
     def ivfRecall(rows: Array[org.apache.spark.sql.Row]): java.lang.Double =
       rows.find(r => r.getAs[String]("tier") == "ivf" &&
@@ -599,10 +598,12 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("tierAdvisor under an UNMEASURED conf surfaces no recalls — no stale-card fallback (r22 ADVICE)") {
     // A session holding cards for other geometries must not lend them to
-    // a conf that never measured: centroidCache retains only 2 codebooks
-    // per dir, so after a 3-geometry A/B the current conf's codebook can
-    // be evicted while a stale ann_recall_* card survives — the old
-    // peekPrefix fallback then applied the superseded geometry's floor.
+    // a conf that never measured: the session store keeps one codebook
+    // per (k, seed, geometry) name, but the current conf's codebook can
+    // be missing (never trained, replaced by a new corpus version, or
+    // evicted by the store's bound) while a stale ann_recall_* card
+    // survives — a prefix fallback would apply the superseded
+    // geometry's floor.
     // Cost-only eligibility is the conservative degradation.
     Similarity.annRecall(spark, sf).collect() // a card EXISTS in-session
     spark.conf.set("spark.graft.ann.nprobe", "2") // unmeasured geometry

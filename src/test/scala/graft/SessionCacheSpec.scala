@@ -1,14 +1,163 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.{AtomicInteger, LongAdder}
 
-import graft.sources.SessionCache
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.operators.AnnIndex
+import graft.sources.{PlanCache, SessionCache, Tables}
 
 /** SessionCache contract: hit on unchanged data, rebuild when the input
   * directory's file listing changes (the ADVICE-flagged staleness hole),
-  * eager drop via invalidate.
+  * eager drop via invalidate — and the one store's contract, table-driven
+  * over the three kinds of entry it holds (a checkpointed frame, a driver
+  * value, a prepared plan).
   */
 class SessionCacheSpec extends SparkSpec {
+
+  private val builds = TrieMap.empty[String, AtomicInteger]
+  private def built(name: String): Int = builds.get(name).fold(0)(_.get)
+
+  /** One kind of store entry: `touch(dir, name, inner)` memoizes a value
+    * for `dir` under `name`, counting its builds and running `inner`
+    * inside the build. */
+  private case class Family(label: String, touch: (String, String, () => Unit) => Any)
+
+  private def counted(name: String, inner: () => Unit): Unit = {
+    builds.getOrElseUpdate(name, new AtomicInteger).incrementAndGet()
+    inner()
+  }
+
+  private val families = Seq(
+    Family("frame", (dir, name, inner) =>
+      SessionCache.cached(spark, name, dir) {
+        counted(name, inner); spark.read.parquet(s"$dir/t.parquet")
+      }),
+    Family("value", (dir, name, inner) =>
+      SessionCache.memo(spark, dir, SessionCache.dirFingerprint(spark, dir), name) {
+        counted(name, inner); 42L
+      }),
+    Family("plan", (dir, name, inner) =>
+      PlanCache.cached(spark, name, dir) {
+        counted(name, inner); spark.read.parquet(s"$dir/t.parquet").select("x")
+      }))
+
+  private def corpus(prefix: String): String = {
+    import spark.implicits._
+    val dir = Files.createTempDirectory(prefix).toString
+    Seq(1, 2, 3).toDF("x").write.parquet(s"$dir/t.parquet")
+    Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)), (2L, Seq(0.6f, 0.8f)))
+      .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("store: 8 concurrent first touches run the build once, for every family") {
+    families.foreach { f =>
+      val dir = corpus(s"sc-race-${f.label}")
+      val name = s"sc_race_${f.label}"
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      val calls = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[Any] {
+        def call(): Any = f.touch(dir, name, () => Thread.sleep(50))
+      }))
+      pool.shutdown()
+      calls.foreach(_.get())
+      assert(built(name) == 1, s"${f.label}: build ran ${built(name)} times under 8-way first touch")
+    }
+  }
+
+  test("store: a build may memo another name on the same dir, for every family") {
+    families.foreach { f =>
+      val dir = corpus(s"sc-nested-${f.label}")
+      val outer = s"sc_outer_${f.label}"
+      val inner = s"${outer}_inner"
+      def innerValue(): Long = SessionCache.memo(
+        spark, dir, SessionCache.dirFingerprint(spark, dir), inner) {
+        counted(inner, () => ()); 7L
+      }
+      f.touch(dir, outer, () => assert(innerValue() == 7L))
+      f.touch(dir, outer, () => ())
+      assert(innerValue() == 7L)
+      assert(built(outer) == 1 && built(inner) == 1,
+        s"${f.label}: nested builds must each run once (outer=${built(outer)} inner=${built(inner)})")
+    }
+  }
+
+  test("store: a new version replaces the entry and invalidates the catalog for that dir") {
+    import spark.implicits._
+    families.foreach { f =>
+      val dir = corpus(s"sc-version-${f.label}")
+      val name = s"sc_version_${f.label}"
+      f.touch(dir, name, () => ())
+      val resolved = Tables(spark, dir, "t")
+      val size0 = SessionCache.size
+      Seq(4).toDF("x").write.mode("append").parquet(s"$dir/t.parquet")
+      f.touch(dir, name, () => ())
+      assert(built(name) == 2, s"${f.label}: a new version must rebuild")
+      assert(SessionCache.size == size0, s"${f.label}: the new version must REPLACE the entry")
+      assert(Tables(spark, dir, "t") ne resolved,
+        s"${f.label}: replacing a version must drop the catalog's pinned listing")
+      assert(Tables(spark, dir, "t").count() == 4)
+    }
+  }
+
+  test("store: the bound evicts the oldest entry, never the one just inserted") {
+    families.foreach { f =>
+      SessionCache.clear()
+      val dir = corpus(s"sc-bound-${f.label}")
+      val filler = s"$dir/filler"
+      val (oldest, newest) = (s"sc_oldest_${f.label}", s"sc_newest_${f.label}")
+      f.touch(dir, oldest, () => ())
+      (1 until SessionCache.MaxEntries).foreach(i =>
+        SessionCache.memo(spark, filler, "v", s"fill_$i")(i))
+      assert(SessionCache.size == SessionCache.MaxEntries)
+      f.touch(dir, newest, () => ())
+      assert(SessionCache.size == SessionCache.MaxEntries, "the bound must hold")
+      f.touch(dir, newest, () => ())
+      assert(built(newest) == 1, s"${f.label}: the entry just inserted must survive the bound")
+      assert(SessionCache.peek[Int](spark, "fill_1", filler, "v").contains(1))
+      f.touch(dir, oldest, () => ())
+      assert(built(oldest) == 2, s"${f.label}: the oldest entry must be the one evicted")
+      SessionCache.invalidate(filler)
+    }
+  }
+
+  test("store: invalidate(dir) releases every family, corpus counts and codebooks included") {
+    val dir = corpus("sc-release")
+    val ver = SessionCache.dirFingerprint(spark, dir)
+    val jobs = new LongAdder
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.increment()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // jobs started by one call, read after draining the async bus
+    def jobsOf(body: => Any): Long = {
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      val j0 = jobs.sum
+      body
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      jobs.sum - j0
+    }
+    try {
+      families.foreach(f => f.touch(dir, s"sc_release_${f.label}", () => ()))
+      AnnIndex.centroids(spark, dir, ver)
+      assert(jobsOf(AnnIndex.corpusCount(spark, dir, ver)) == 0, "warm count must hit")
+      assert(AnnIndex.peekAssignTag(spark, dir, ver).isDefined)
+
+      SessionCache.invalidate(dir)
+
+      assert(jobsOf(AnnIndex.corpusCount(spark, dir, ver)) > 0,
+        "invalidate must release the corpus count: the recount runs its job")
+      assert(AnnIndex.peekAssignTag(spark, dir, ver).isEmpty,
+        "invalidate must release the codebook")
+      families.foreach { f =>
+        val name = s"sc_release_${f.label}"
+        f.touch(dir, name, () => ())
+        assert(built(name) == 2, s"${f.label}: invalidate must release the entry")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   test("cache hits on unchanged data, rebuilds on append, drops on invalidate") {
     import spark.implicits._
