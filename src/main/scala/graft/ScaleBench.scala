@@ -19,8 +19,8 @@ import graft.operators.{AnnIndex, Dedup, Similarity}
   *    [[AnnIndex.TwoLevelMinPivots]], so the two-level coarse quantizer
   *    runs end to end. Prints the four index-family cold builds, the ANN
   *    and embedding-curation families, and the recall card. `mode=`,
-  *    `nprobe=`, `pivots=` and `seed=` set the `spark.graft.ann.*` conf of
-  *    the same name (`mode=` sets `assignMode`).
+  *    `nprobe=` and `pivots=` set the `spark.graft.ann.*` conf of the same
+  *    name (`mode=` sets `assignMode`).
   *  - `dedup`: `nBase` language-realistic docs (5 langs × 20 sources,
   *    60–260 words drawn from per-language function-word lists, es/fr
   *    sharing words so langid confusion is real), each replicated 8×
@@ -36,7 +36,7 @@ import graft.operators.{AnnIndex, Dedup, Similarity}
   *
   * Results are recorded in BASELINE.md ("First measured two-level-regime
   * bench", "Dedup decade").
-  * Usage: runMain graft.ScaleBench ann [outDir] [n=20000] [mode=exact|probes] [nprobe=N] [pivots=K] [seed=hash|plusplus]
+  * Usage: runMain graft.ScaleBench ann [outDir] [n=20000] [mode=exact|probes] [nprobe=N] [pivots=K]
   *        runMain graft.ScaleBench dedup [outDir] [nBase=62500] [family=dedup|text|curation]
   */
 object ScaleBench {
@@ -117,7 +117,7 @@ object ScaleBench {
     // fingerprints the corpus dir recursively, so an index root inside it
     // would churn the version on every build
     spark.conf.set("spark.graft.ann.indexRoot", s"${dir}_index/graft_ann")
-    Seq("mode" -> "assignMode", "nprobe" -> "nprobe", "pivots" -> "pivots", "seed" -> "seed")
+    Seq("mode" -> "assignMode", "nprobe" -> "nprobe", "pivots" -> "pivots")
       .foreach { case (a, c) => arg(a).foreach(spark.conf.set(s"spark.graft.ann.$c", _)) }
     val dim = 64
     fixture(spark, s"$dir/embeddings.parquet", n) {

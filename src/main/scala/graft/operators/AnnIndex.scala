@@ -192,10 +192,9 @@ object AnnIndex {
   // the name (r20, the assignTag finding's sibling): a
   // `spark.graft.ann.pivots` flip regroups the other codebook while the
   // first stays resident (no A/B thrash, r18 ADVICE), and a SAME-k
-  // retrain (seed-mode/oversample/iters flip) must regroup too — the
-  // k-only key served the first variant's super-pivot groups to every
-  // later same-k codebook of a session, distorting probes-mode cell
-  // rankings
+  // codebook with other centroids must regroup too — the k-only key
+  // served the first variant's super-pivot groups to every later same-k
+  // codebook of a session, distorting probes-mode cell rankings
   private[graft] def pivotGroupsCached(
       spark: SparkSession, dir: String, version: String,
       cents: Seq[Array[Double]]): Seq[(Array[Double], Seq[Int])] =
@@ -279,76 +278,34 @@ object AnnIndex {
   val SampleIds = 4096L
   def sampleSize(k: Int): Long = math.max(SampleIds, 32L * k)
 
-  /** k-means‖ seeding rounds (Bahmani et al., "Scalable k-means++",
-    * VLDB 2012): D²-weighted draws in [[SeedRounds]] distributed batches
-    * instead of k sequential driver passes. Total seeding work is ONE
-    * extra flat-assignment-equivalent pass over the sample (each round
-    * updates the running min-distance² against the round's NEW seeds
-    * only — Σ|new|·d per row = k·d), so the build pays ~+1 Lloyd
-    * iteration. See [[seedPlusPlus]].
-    */
-  val SeedRounds = 8
-
-  /** Codebook seeding mode: `plusplus` (default — distributed k-means‖
-    * D² seeding) or `hash` (the pre-r19 uniform hash draw, kept as the
-    * measured A/B lever). The r18 200k fixture measured the hash-seeded
-    * 4-iteration Lloyd plateauing at ivf recall@10 0.6–0.7 REGARDLESS of
-    * k (447/2000/4000 cells vs 2,000 natural clusters): uniform seeding
-    * drops multiple seeds into the same natural cluster and leaves
-    * sibling clusters sharing a blended pivot, and 4 Lloyd iterations
-    * cannot migrate a pivot across cluster boundaries. D² seeding picks
-    * spread-out DATA POINTS, so distinct natural clusters get their own
-    * pivot when k affords one. Folded into the centroid-cache key (a
-    * flip retrains, never serves the other mode's codebook); downstream
-    * store versions hash the centroids so they re-key automatically.
-    */
-  private[graft] def seedMode(spark: SparkSession): String = {
-    val m = spark.conf.get("spark.graft.ann.seed", "plusplus")
-    require(m == "plusplus" || m == "hash",
-      s"spark.graft.ann.seed must be plusplus|hash, got $m")
-    m
-  }
-
-  /** k-means‖ oversampling factor ℓ (Bahmani et al.'s second phase, which
-    * the r19 seeding skipped): [[seedPlusPlus]] draws ℓ·k D² candidates,
+  /** k-means‖ oversampling factor ℓ (Bahmani et al., "Scalable
+    * k-means++", VLDB 2012): [[seedPlusPlus]] draws ℓ·k D² candidates,
     * weights them by one sample-assignment pass, and prunes to k with a
-    * deterministic weighted greedy k-means++ on the driver. ℓ=1 is the
-    * bare r19 draw (no prune). Why it exists: a bare D² draw is
-    * noise-seeking — at small d / high per-dim noise the largest D²
-    * points are cluster-edge OUTLIERS, and Lloyd then anchors a pivot on
-    * each (the r19 d16 regression, probes-mean 0.88 → 0.80 vs hash).
-    * Weighting kills exactly those candidates: an outlier attracts few
-    * sample points, so w·D² prunes it while well-supported spread-out
-    * candidates survive. Folded into the centroid-cache key.
+    * deterministic weighted greedy k-means++ on the driver. Why the
+    * prune: a bare D² draw is noise-seeking — at small d / high per-dim
+    * noise the largest D² points are cluster-edge OUTLIERS, and Lloyd
+    * then anchors a pivot on each (the r19 d16 regression, probes-mean
+    * 0.88 → 0.80). An outlier attracts few sample points, so w·D² prunes
+    * it while well-supported spread-out candidates survive.
     *
-    * Default ℓ=3, measured (DevSeedRecall / DevSeedLaw, deterministic
-    * recalls): d16 probes 0.80 (ℓ=1) → 0.88, d64 0.92 → 0.94, and at the
-    * 200k law geometry batch recall 0.66 → 0.62 with the single-query
-    * card 0.7 → 0.8/0.7 — the r19 d16 regression closed at law parity.
-    * Cost (DevBuildCost, interleaved): full cold ivf build ratio
-    * ℓ3/ℓ1 = 1.01 at 200k (the sample-sized train is not the build's
-    * pole); train-only reads 1.73× vs hash (DevSeedCost — the draws +
-    * weighting are ~2ℓ sample passes against Lloyd's 4). The driver
-    * prune is O(ℓ·k²·d) flops (~2.6e10 at the 8192-pivot cap with
-    * d64 — seconds, against a minutes-scale train).
+    * ℓ=3, measured (deterministic recalls): d16 probes 0.80 (ℓ=1) → 0.88,
+    * d64 0.92 → 0.94, and at the 200k law geometry the single-query card
+    * 0.7 → 0.8/0.7. Cost: full cold ivf build ratio ℓ3/ℓ1 = 1.01 at 200k
+    * (the sample-sized train is not the build's pole). The driver prune
+    * is O(ℓ·k²·d) flops (~2.6e10 at the 8192-pivot cap with d64 —
+    * seconds, against a minutes-scale train).
     */
-  private[graft] def seedOversample(spark: SparkSession): Int = {
-    val l = spark.conf.get("spark.graft.ann.seedOversample", "3").toInt
-    require(l >= 1 && l <= 8,
-      s"spark.graft.ann.seedOversample must be in [1, 8], got $l")
-    l
-  }
+  val SeedOversample = 3
 
-  /** Lloyd iteration count (conf-overridable; default [[KmeansIters]]).
-    * Folded into the centroid-cache key like every other trained-state
-    * knob. */
-  private[graft] def lloydIters(spark: SparkSession): Int = {
-    val it = spark.conf.get(
-      "spark.graft.ann.kmeansIters", KmeansIters.toString).toInt
-    require(it >= 1 && it <= 64,
-      s"spark.graft.ann.kmeansIters must be in [1, 64], got $it")
-    it
-  }
+  /** k-means‖ draw rounds: the ℓ·k candidates arrive in [[SeedRounds]]
+    * distributed D²-weighted batches instead of k sequential driver
+    * passes (Bahmani: ≈ ℓ·k draws in O(log n) rounds — the adaptivity a
+    * bare per-k draw needed 8 rounds for is bought by the ℓ× sample
+    * width). Each round is one job; 8 rounds at ℓ=3 priced the train at
+    * 1.99× the uniform hash draw's on the 20k card, pure job overhead at
+    * small corpora.
+    */
+  val SeedRounds = 4
 
   /** LSH geometry: `bands` bands (a pair collides if ANY band agrees) of
     * `bandBits` hyperplane bits each — BOTH corpus-size-adaptive, the
@@ -561,13 +518,12 @@ object AnnIndex {
     * ([[LshStoreFormat]]) format token. The batch build stamps its
     * staging dir with this; an operator may also use it on an unmarked
     * layout whose geometry is known out-of-band — but ONLY one that is
-    * already physically at the group-dir grain. The data itself must be
-    * migrated first ([[migrateLshStoreV2]] does both): stamping a v2
-    * token onto an actual dir-per-bucket tree would re-enable exactly the
-    * mixed (band_id,band_key)/(band_id,band_grp) partition forest the
-    * format guard refuses, so this VERIFIES the directory grain (any
-    * `band_key=` directory under a `band_id=` directory means v1) and
-    * throws rather than mis-mark.
+    * already physically at the group-dir grain: stamping a v2 token onto
+    * an actual dir-per-bucket tree would re-enable exactly the mixed
+    * (band_id,band_key)/(band_id,band_grp) partition forest the format
+    * guard refuses, so this VERIFIES the directory grain (any `band_key=`
+    * directory under a `band_id=` directory means v1) and throws rather
+    * than mis-mark.
     */
   def markLshGeom(spark: SparkSession, path: String, geom: LshGeom): Unit = {
     val p = new Path(path, LshGeomMarker)
@@ -577,7 +533,7 @@ object AnnIndex {
         s"LSH layout at $path is physically at the v1 dir-per-bucket " +
           "grain (band_key= directories) — marking it as " +
           s"$LshStoreFormat without migrating the data would mix " +
-          "partition trees. Migrate first (AnnIndex.migrateLshStoreV2).")
+          "partition trees. Rebuild the index at a fresh path.")
     val out = fs.create(p, true)
     try out.write(
       s"${geom.bands} ${geom.bandBits} ${geom.seed} $LshStoreFormat"
@@ -596,61 +552,6 @@ object AnnIndex {
       .exists(band => fs.listStatus(band.getPath)
         .exists(st => st.isDirectory &&
           st.getPath.getName.startsWith("band_key=")))
-
-  /** Migrate a pre-r17 (dir-per-bucket) streamed LSH layout IN PLACE to
-    * the group-dir store format and stamp the v2 marker — the
-    * no-manual-step remedy behind the format guard: a streamed append
-    * landing on a v1 layout migrates it once and proceeds
-    * ([[assertLshGeomMarker]] calls this on format mismatch; r17 refused
-    * there and the only remedy was an operator deleting the store). Write
-    * shape is the batch build's exactly (group co-location, in-file
-    * band_key sort, 1 MB row groups, task-parallel commit — the staging
-    * tree is never served unpublished), and publication follows
-    * [[graft.sources.Layout.compactPartitions]]'s swap discipline: the
-    * new tree is FULLY written into a hidden staging dir before any old
-    * directory is touched. A crash mid-swap leaves a half-migrated tree,
-    * acceptable for the same reason as compaction (derived artifact,
-    * rebuildable from its corpus) — and because the v2 marker is only
-    * re-stamped AFTER the swap completes, a half-swapped layout still
-    * REFUSES appends at the next batch rather than mixing grains.
-    * Cost is one read+write of the index (signatures, not vectors),
-    * paid once per layout ever.
-    */
-  def migrateLshStoreV2(
-      spark: SparkSession, path: String, geom: LshGeom): Unit = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(root, "_graft_lsh_migrate_staging")
-    fs.delete(staging, true)
-    val bandDirs = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("band_id="))
-      .map(_.getPath)
-    if (bandDirs.nonEmpty) {
-      withBandGrp(
-        spark.read.option("basePath", path)
-          .parquet(bandDirs.toIndexedSeq.map(_.toString): _*)
-          // partition-dir inference types band_key by its VALUES (int for
-          // narrow fixtures) — cast to the store schema before it becomes
-          // an in-file column
-          .select(col("vec_id"), col("band_id").cast("int"),
-            col("band_key").cast("bigint")),
-        geom)
-        .repartition(col("band_id"), col("band_grp"))
-        .sortWithinPartitions("band_id", "band_grp", "band_key")
-        .write.mode("overwrite").options(Layout.CommitterV2)
-        .option("parquet.block.size", (1L << 20).toString)
-        .partitionBy("band_id", "band_grp").parquet(staging.toString)
-      bandDirs.foreach(d => fs.delete(d, true))
-      fs.listStatus(staging)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("band_id="))
-        .foreach(st =>
-          fs.rename(st.getPath, new Path(root, st.getPath.getName)))
-    }
-    fs.delete(staging, true)
-    markLshGeom(spark, path, geom)
-    Layout.refreshRewrittenLayout(spark, path)
-  }
 
   /** Write-once / assert-after: marks an EMPTY unmarked layout, asserts
     * against the stored geometry otherwise — failing LOUDLY instead of
@@ -672,12 +573,13 @@ object AnnIndex {
             s"ingest/probe uses $geom — streamed rows would land in " +
             "unreachable buckets. Re-index under the new geometry (fresh " +
             "path) or pass the stored geometry (AnnIndex.readLshGeomMarker).")
-      case Some((stored, format)) if format != LshStoreFormat =>
+      case Some((_, format)) if format != LshStoreFormat =>
         // same geometry, pre-v2 directory grain: appending would mix
-        // (band_id, band_grp) and (band_id, band_key) partition trees.
-        // r17 refused here; now the layout migrates in place once and
-        // the append proceeds onto the v2 tree (r17 verdict #4).
-        migrateLshStoreV2(spark, path, stored)
+        // (band_id, band_grp) and (band_id, band_key) partition trees
+        throw new IllegalStateException(
+          s"LSH layout at $path is in store format $format (dir-per-bucket " +
+            s"grain); this version appends only to $LshStoreFormat " +
+            "(group-dir) layouts — rebuild the index at a fresh path.")
       case Some(_) => ()
       case None =>
         val p = new Path(path, LshGeomMarker)
@@ -703,7 +605,7 @@ object AnnIndex {
             // lost the create race — assert against the winner's marker,
             // geometry AND format (a winner always stamps the current
             // format, so a non-v2 token here means the "race" was an
-            // out-of-band re-mark: refuse, don't migrate concurrently)
+            // out-of-band re-mark: refuse)
             readLshMarker(spark, path) match {
               case Some((stored, _)) if stored != geom =>
                 throw new IllegalStateException(
@@ -808,7 +710,7 @@ object AnnIndex {
     *    count job per corpus version, cached with the codebook itself;
     *  - sample = [[kmeansSample]] at [[sampleSize]](k) rows —
     *    deterministic, unbiased, materialized;
-    *  - seed = the first k sample vectors in sample (hash) order;
+    *  - seeds = [[seedPlusPlus]] (k-means‖ D² draw, weighted prune);
     *  - each iteration assigns the sample map-side against the broadcast
     *    codebook (same argmax as [[assign]]) and recomputes per-dimension
     *    means with DECIMAL-exact sums, so centroids are bit-stable under
@@ -818,7 +720,8 @@ object AnnIndex {
     *  - only k×dim doubles ever reach the driver (the centroids — the
     *    per-dim means are rolled up to ONE row per cluster before the
     *    collect, so the driver sees k rows, ≤ 32 MB at the pivot cap),
-    *    per iteration; empty cells keep their previous centroid.
+    *    per iteration; empty cells keep their previous centroid;
+    *  - [[KmeansIters]] Lloyd iterations.
     * Cached per corpus version (same fingerprint key as [[ensureIvf]]).
     */
   def centroids(spark: SparkSession, dir: String): Seq[Array[Double]] =
@@ -834,18 +737,11 @@ object AnnIndex {
     // serve this one (downstream store versions hash the centroids, so
     // they follow automatically)
     val kTarget = pivotCount(spark, corpusCount(spark, dir, version))
-    SessionCache.memo(spark, dir, version, centroidName(spark, kTarget)) {
+    SessionCache.memo(spark, dir, version, centroidName(kTarget)) {
       val sample = kmeansSample(spark, dir, sampleSize(kTarget))
-      var cents: Seq[Array[Double]] =
-        if (seedMode(spark) == "plusplus") seedPlusPlus(spark, sample, kTarget)
-        else sample
-          // dropDuplicates: an appended corpus may repeat ids (same vector)
-          .dropDuplicates("vec_id")
-          .orderBy(xxhash64(col("vec_id"), lit(42)), col("vec_id"))
-          .limit(kTarget)
-          .collect().map(_.getSeq[Double](1).toArray).toSeq
+      var cents = seedPlusPlus(spark, sample, kTarget)
       val k = cents.size // corpus smaller than kTarget degrades gracefully
-      for (_ <- 1 to lloydIters(spark)) {
+      for (_ <- 1 to KmeansIters) {
         val means = assign(sample, codebookOf(spark, cents))
           .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
           .groupBy("cluster", "pos")
@@ -870,19 +766,20 @@ object AnnIndex {
     }
   }
 
-  /** The codebook's memo name: k, seed mode, oversample factor and Lloyd
-    * iteration count are IN it — a trained-state knob flip trains the
-    * other codebook instead of serving this one, and an A/B keeps both
-    * resident; a new corpus version replaces each. */
-  private def centroidName(spark: SparkSession, kTarget: Int): String =
-    s"ann.centroids|k$kTarget|s${seedMode(spark)}" +
-      s"|l${seedOversample(spark)}|i${lloydIters(spark)}"
+  /** The codebook's memo name: k is IN it — a `spark.graft.ann.pivots`
+    * flip trains the other codebook instead of serving this one, and an
+    * A/B keeps both resident; a new corpus version replaces each. */
+  private def centroidName(kTarget: Int): String = s"ann.centroids|k$kTarget"
 
   /** Distributed, DETERMINISTIC k-means‖ D² seeding over the (already
     * checkpointed) sample — the r19 fix for the hash-seeded recall
-    * plateau (see [[seedMode]]):
-    *  - seed 0 is the hash-order first sample vector (the old draw's
-    *    first pick — cross-run stable);
+    * plateau: the r18 200k fixture measured a uniform hash draw + 4 Lloyd
+    * iterations stuck at ivf recall@10 0.6–0.7 REGARDLESS of k, because
+    * uniform seeding drops several seeds into one natural cluster and 4
+    * iterations cannot migrate a pivot across cluster boundaries; D²
+    * seeding picks spread-out DATA POINTS instead:
+    *  - seed 0 is the hash-order first sample vector (cross-run
+    *    stable);
     *  - the sample carries a running `mind2 = 2·(1 − max cos to the seed
     *    set)` (squared Euclidean for unit vectors; the index's own
     *    similarity), updated map-side per round against the round's NEW
@@ -896,19 +793,19 @@ object AnnIndex {
     *  - points already coincident with a seed (mind2 ≈ 0) and degenerate
     *    rows (NaN cosine — zero vectors) are excluded from the draw;
     *    if the draw dries up (corpus has < k distinct points) seeding
-    *    stops short and Lloyd degrades gracefully exactly as the hash
-    *    seed did.
+    *    stops short and Lloyd degrades gracefully;
+    *  - the ℓ·k candidates ([[SeedOversample]]) are pruned to k by
+    *    [[pruneWeighted]].
     * Driver traffic: m×d doubles per round (the drawn seeds) — never the
     * sample. Distributed work: Σ rounds n·m·d = n·ℓ·k·d for the draws
-    * plus one n·ℓ·k·d weighting pass when ℓ > 1 ([[seedOversample]]) —
-    * ~2ℓ flat-assignment-equivalent passes over the SAMPLE, priced by
-    * DevSeedCost against the ≤1.5×-vs-hash build gate.
+    * plus one n·ℓ·k·d weighting pass — ~2ℓ flat-assignment-equivalent
+    * passes over the SAMPLE.
     */
   private[graft] def seedPlusPlus(
       spark: SparkSession, sample: DataFrame, k: Int): Seq[Array[Double]] = {
     // oversample: draw ℓ·k candidates with the same machinery, then prune
-    // to k by sample-support weight (see [[seedOversample]] for why)
-    val target = k * seedOversample(spark)
+    // to k by sample-support weight (see [[SeedOversample]] for why)
+    val target = k * SeedOversample
     val first = sample
       .dropDuplicates("vec_id")
       .orderBy(xxhash64(col("vec_id"), lit(42)), col("vec_id"))
@@ -933,19 +830,11 @@ object AnnIndex {
       .drop("pvs")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var prevState: DataFrame = null
-    // oversampled mode collapses the draw rounds (Bahmani: total draws
-    // ≈ ℓ·k in O(log n) rounds — the ADAPTIVITY a per-k draw needs 8
-    // rounds for is bought by the ℓ× sample width instead): each round
-    // is a job, and at ℓ=3 the 8-round schedule priced 1.99× vs hash on
-    // the 20k card — pure job overhead at small corpora, same total
-    // compute at scale either way
-    val rounds = if (target > k) math.max(4, SeedRounds / seedOversample(spark))
-      else SeedRounds
     var r = 0
     var dry = false
-    while (r < rounds && seeds.size < target && !dry) {
+    while (r < SeedRounds && seeds.size < target && !dry) {
       val m = math.max(1, math.ceil(
-        (target - seeds.size).toDouble / (rounds - r)).toInt)
+        (target - seeds.size).toDouble / (SeedRounds - r)).toInt)
       // u ∈ (0, 1] from the top 63 bits of xxhash64(vec_id, round-salt);
       // Efraimidis–Spirakis: P(i drawn) ∝ w_i under top-m of u^(1/w) —
       // ln(u)/w is the monotone, overflow-free form. NaN mind2 (zero
@@ -1500,22 +1389,21 @@ object AnnIndex {
       spark: SparkSession, dir: String, version: String): Option[String] = {
     val kTarget = pivotCount(spark, corpusCount(spark, dir, version))
     SessionCache.peek[Seq[Array[Double]]](
-      spark, centroidName(spark, kTarget), dir, version).map(tagOf(spark, _))
+      spark, centroidName(kTarget), dir, version).map(tagOf(spark, _))
   }
 
   def assignTag(spark: SparkSession, dir: String, version: String): String =
     tagOf(spark, centroids(spark, dir, version))
 
-  private def tagOf(spark: SparkSession, cents: Seq[Array[Double]]): String = {
+  private[graft] def tagOf(spark: SparkSession, cents: Seq[Array[Double]]): String = {
     val k = cents.size
     // k AND the centroid bytes are part of the tag: any retrain of the
-    // codebook — a `spark.graft.ann.pivots` override, a seed-mode or
-    // oversample flip, different Lloyd iterations — must re-key every
-    // consumer keyed by the tag (cards, probe-conf artifact keys). The
-    // r20 DevSeedLaw sweep caught the k-only tag serving the FIRST
-    // variant's ann_recall card to every later same-k codebook of the
-    // session — the store versions followed the centroid hash, the card
-    // didn't.
+    // codebook — a `spark.graft.ann.pivots` override, or a same-k
+    // codebook with other centroids — must re-key every consumer keyed
+    // by the tag (cards, probe-conf artifact keys). The r20 DevSeedLaw
+    // sweep caught the k-only tag serving the FIRST variant's ann_recall
+    // card to every later same-k codebook of the session — the store
+    // versions followed the centroid hash, the card didn't.
     val cb = centsDigest(cents)
     if (k <= TwoLevelMinPivots) s"flat-k$k-c$cb"
     // exact mode equals the flat argmax by construction, so the two tags

@@ -264,36 +264,6 @@ object Dedup {
       .orderBy(desc("jaccard"), asc("doc_a"), asc("doc_b"))
       .limit(20)
 
-  /** Near-dup CLUSTERS: connected components over the verified near-dup
-    * edges (Jaccard ≥ 0.5), via min-label propagation run to a FIXPOINT —
-    * each iteration every node adopts the smallest label in its
-    * neighborhood, and the loop stops as soon as an iteration changes no
-    * label (one key-only join per pass over the 16 B label rows), with
-    * `maxIters` as the hard runaway bound. Near-dup clusters are shallow
-    * (dup groups, boilerplate families) so convergence is typically 2-3
-    * passes, but a deeper chain (sliding boilerplate) is now exact, not
-    * silently split.
-    * Emits one row per multi-document cluster: representative (min doc_id),
-    * member count.
-    * Scale: each iteration is two key-only joins + one aggregate (labels
-    * are (id, label) pairs — 16 B rows); at 100 TB checkpoint the label
-    * frame every 2-3 iterations to cut lineage, and switch to
-    * large-star/small-star if components can be deep (that variant halves
-    * the iteration count to O(log n) at the cost of a denser edge frame).
-    */
-  /** Min-label propagation to fixpoint: nodes(doc_id) + undirected
-    * edges(doc_a, doc_b) → (doc_id, label) where label = the component's
-    * smallest doc_id — exact for any component whose diameter is below
-    * `maxIters`, and the loop detects convergence and stops early.
-    *
-    * Lineage discipline — the make-or-break of iterative DataFrame code:
-    * each iteration references `edges` twice and the previous labels three
-    * times, so WITHOUT materialization the upstream pipeline re-executes
-    * O(3^iters) times (measured: 40 s for 5 iterations over the LSH edge
-    * set at sf0.1; ~1 s materialized). `localCheckpoint` truncates lineage
-    * into executor block storage; a cluster deployment with lossy executors
-    * uses reliable `checkpoint` to the distributed FS instead.
-    */
   /** Diagnostic: (iterations run, converged-before-bound) of the LAST
     * [[propagateLabels]] call in this JVM — the decade-bench observable
     * (r19 verdict #5: "does propagation still converge at 500k docs?"
@@ -303,7 +273,27 @@ object Dedup {
   private[graft] val lastPropagation =
     new java.util.concurrent.atomic.AtomicReference[(Int, Boolean)]((0, true))
 
-  def propagateLabels(nodes: DataFrame, edges: DataFrame, maxIters: Int = 20): DataFrame = {
+  /** Min-label propagation to fixpoint: nodes(doc_id) + undirected
+    * edges(doc_a, doc_b) → (doc_id, label) where label = the component's
+    * smallest doc_id — exact for any component whose diameter is below
+    * `maxIters`, and the loop detects convergence and stops early; a
+    * deeper component is split ([[componentLabels]] finishes it).
+    *
+    * Lineage discipline — the make-or-break of iterative DataFrame code:
+    * each iteration references `edges` twice and the previous labels three
+    * times, so WITHOUT materialization the upstream pipeline re-executes
+    * O(3^iters) times (measured: 40 s for 5 iterations over the LSH edge
+    * set at sf0.1; ~1 s materialized). `localCheckpoint` truncates lineage
+    * into executor block storage; a cluster deployment with lossy executors
+    * uses reliable `checkpoint` to the distributed FS instead.
+    */
+  def propagateLabels(nodes: DataFrame, edges: DataFrame, maxIters: Int = 20): DataFrame =
+    propagateConverged(nodes, edges, maxIters)._1
+
+  /** [[propagateLabels]] and whether it converged before `maxIters` —
+    * read off the loop's own last change probe, so no extra action. */
+  private[graft] def propagateConverged(
+      nodes: DataFrame, edges: DataFrame, maxIters: Int = 20): (DataFrame, Boolean) = {
     val e = edges.localCheckpoint()
     var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
       .localCheckpoint()
@@ -331,7 +321,7 @@ object Dedup {
       it += 1
     }
     lastPropagation.set((it, converged))
-    labels
+    (labels, converged)
   }
 
   /** Alternating large-star/small-star connected components — the
@@ -349,8 +339,8 @@ object Dedup {
     * Cost per round: two key-only aggregates + joins over 16 B edge rows;
     * the same localCheckpoint lineage discipline as the label loop.
     * Returns (doc_id, label = component minimum) — identical output to
-    * [[propagateLabels]] (property-tested), chosen via
-    * `spark.graft.cc = star` in [[dedupClusters]].
+    * [[propagateLabels]] (property-tested); [[componentLabels]] runs it
+    * when propagation hits its bound unconverged.
     */
   def starLabels(nodes: DataFrame, edges0: DataFrame, maxIters: Int = 30): DataFrame =
     starLabelsWithIters(nodes, edges0, maxIters)._1
@@ -399,18 +389,32 @@ object Dedup {
     (labels, it)
   }
 
-  /** The component-label frame (doc_id → component min) as a SessionCache
-    * artifact — 16 B/row, consumed by both [[dedupClusters]] and
-    * [[dedupKeep]], so the iterative label computation runs once per
-    * (session, corpus, algorithm). Label propagation is the default
-    * (near-dup components are shallow); star contraction is the
-    * deep-component option — flip `spark.graft.cc=star` when components
-    * can be long chains (sliding boilerplate, shingle overlap). The
-    * algorithm is part of the artifact key, so flipping the flag never
-    * serves the other engine's frame.
+  /** Connected-component labels (doc_id → component min): min-label
+    * propagation, which converges in 2-3 passes on shallow near-dup
+    * components; when it reaches its bound unconverged (a chain deeper
+    * than `maxIters` — sliding boilerplate, shingle overlap) star
+    * contraction relabels the same edges in O(log n) rounds. The engine
+    * is chosen by observed convergence, and a converged run costs no
+    * action beyond propagation's own.
+    */
+  private[graft] def componentLabels(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    val (labels, converged) = propagateConverged(nodes, edges)
+    if (converged) labels else starLabels(nodes, edges)
+  }
+
+  /** The verified near-dup edges (Jaccard ≥ 0.5) the clusters are the
+    * connected components of. */
+  private[graft] def nearDupEdges(spark: SparkSession, dir: String, fp: String): DataFrame =
+    minhashPairs(spark, dir, fp)
+      .where(col("jaccard") >= 0.5)
+      .select(col("doc_a"), col("doc_b"))
+
+  /** The component-label frame ([[componentLabels]] over
+    * [[nearDupEdges]]) as a SessionCache artifact — 16 B/row, consumed by
+    * both [[dedupClusters]] and [[dedupKeep]], so the iterative label
+    * computation runs once per (session, corpus).
     */
   private[graft] def nearDupLabels(spark: SparkSession, dir: String): DataFrame = {
-    val algo = spark.conf.get("spark.graft.cc", "propagate")
     // ONE fingerprint resolution per query, shared with the nested
     // minhash-pair artifact (each resolution is a metadata listing).
     // The effective bucket cap folds into the key like the pair set it
@@ -421,17 +425,23 @@ object Dedup {
     // O(corpus rows) — one label per doc; barrier-preserving gate (the
     // iterative propagation must not re-trigger per consumer)
     SessionCache.cachedBoundedBarrier(
-      spark, s"neardup_labels_${algo}_c${textBucketCap(spark)}", dir, fp,
+      spark, s"neardup_labels_c${textBucketCap(spark)}", dir, fp,
       Tables.cachedCount(spark, dir, "documents", fp)) {
-      val edges = minhashPairs(spark, dir, fp)
-        .where(col("jaccard") >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      val nodes = Tables.documents(spark, dir).select("doc_id")
-      if (algo == "star") starLabels(nodes, edges)
-      else propagateLabels(nodes, edges)
+      componentLabels(Tables.documents(spark, dir).select("doc_id"),
+        nearDupEdges(spark, dir, fp))
     }
   }
 
+  /** Near-dup CLUSTERS: connected components over the verified near-dup
+    * edges (Jaccard ≥ 0.5) — [[nearDupLabels]] — emitted as one row per
+    * multi-document cluster: representative (min doc_id), member count.
+    * Near-dup clusters are shallow (dup groups, boilerplate families), so
+    * label propagation converges in 2-3 passes; a chain deeper than its
+    * bound (sliding boilerplate) is finished by star contraction, so the
+    * clusters are exact at any depth, never silently split.
+    * Scale: each propagation pass is two key-only joins + one aggregate
+    * over 16 B (id, label) rows.
+    */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     nearDupLabels(spark, dir)
       .groupBy("label")

@@ -1104,7 +1104,7 @@ object Similarity {
       s"spark.graft.ann.advisorRecallFloor must be in [0, 1], got $floor")
     // ONLY the card measured under the CURRENT conf counts (same key
     // components as annRecall: assignTag + rerank + nprobe) — after an
-    // nprobe/seed A/B the session can hold several ann_recall_* cards and
+    // nprobe/pivots A/B the session can hold several ann_recall_* cards and
     // a lexicographic-max pick over them would apply a superseded
     // geometry's floor (r21 ADVICE). peekAssignTag, not assignTag: the
     // advisor must never train a codebook itself, so the exact key

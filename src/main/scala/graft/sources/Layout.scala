@@ -158,8 +158,7 @@ object Layout {
     * duplicate delivery.
     */
   // The ledger is a directory of zero-byte `_batch-<id>` MARKER files
-  // (underscore prefix: Spark data-source listings ignore `_*`/`.*` names,
-  // so markers can coexist with a legacy parquet ledger in the same dir):
+  // (underscore prefix: Spark data-source listings ignore `_*`/`.*` names):
   // commit = create the marker, probe = one fs.exists by exact name —
   // O(1) per trigger, no listing, no parquet scan, no Spark job. The
   // previous one-parquet-row-per-batch ledger re-listed and re-SCANNED
@@ -176,53 +175,28 @@ object Layout {
   // after recovery — a 1024-deep retention is orders of magnitude past
   // any replay horizon, so pruning can never re-admit a duplicate.
   //
-  // Migration: ledgers written by the old parquet scheme are migrated ONCE
-  // — on the first marker miss, EVERY batch id in the legacy parquet
-  // ledger is backfilled as a marker file and a `_migrated` sentinel
-  // retires the parquet probe for every later process (pre-r11 the legacy
-  // fallback re-scanned the parquet ledger on EVERY marker miss, forever,
-  // and the per-process legacy flag went stale if a ledger dir was deleted
-  // and recreated). All ids, not just a recent horizon: the parquet ledger
-  // honored arbitrarily old ids, so a horizon-limited backfill would
-  // silently re-append a replay older than the horizon — a behavior
-  // narrowing the marker scheme never intended. The cost is one zero-byte
-  // marker per ever-committed batch, created once on the driver; from
-  // there ledgerCommit's normal 1024-deep pruning converges retention.
-  private val legacyLedger =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
+  // The retired parquet ledger is REFUSED, not read: its batch ids are
+  // invisible to the marker probe, so appending over it would re-deliver
+  // every batch it recorded. Spark's parquet committer stamps `_SUCCESS`
+  // and the marker scheme never writes one, so a marker miss pays one
+  // fs.exists for it — the only listing happens on a ledger about to be
+  // refused.
   private def ledgerCommitted(
       spark: SparkSession, ledger: String, batchId: Long): Boolean = {
     val ledgerPath = new org.apache.hadoop.fs.Path(ledger)
     val fs = ledgerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(ledgerPath, s"_batch-$batchId"))) true
-    else if (fs.exists(new org.apache.hadoop.fs.Path(ledgerPath, "_migrated"))) false
-    else {
-      // once per (process, ledger): migrate any legacy parquet ledger,
-      // then answer from markers like every later probe will
-      legacyLedger.computeIfAbsent(ledger, _ => {
-        val isLegacy =
-          fs.exists(ledgerPath) && fs.listStatus(ledgerPath).exists { st =>
-            val n = st.getPath.getName
-            n.startsWith("part-") && n.endsWith(".parquet")
-          }
-        if (isLegacy) {
-          // one long per batch ever committed — driver-bounded
-          val ids = spark.read.parquet(ledger)
-            .select("batch_id").collect().map(_.getLong(0))
-          ids.foreach { id =>
-            fs.create(
-              new org.apache.hadoop.fs.Path(ledgerPath, s"_batch-$id"), true)
-              .close()
-          }
-        }
-        fs.mkdirs(ledgerPath)
-        fs.create(new org.apache.hadoop.fs.Path(ledgerPath, "_migrated"), true)
-          .close()
-        isLegacy
-      })
-      fs.exists(new org.apache.hadoop.fs.Path(ledgerPath, s"_batch-$batchId"))
-    }
+    else if (fs.exists(new org.apache.hadoop.fs.Path(ledgerPath, "_SUCCESS")) &&
+        fs.listStatus(ledgerPath).exists { st =>
+          val n = st.getPath.getName
+          n.startsWith("part-") && n.endsWith(".parquet")
+        })
+      throw new IllegalStateException(
+        s"batch ledger at $ledger holds part-*.parquet files of the retired " +
+          "parquet ledger format, whose batch ids this version does not read " +
+          "— appending would re-deliver every batch it recorded. Rebuild " +
+          "the layout under a fresh checkpoint and ledger directory.")
+    else false
   }
 
   private def ledgerCommit(
@@ -422,9 +396,7 @@ object Layout {
   }
 
   /** Drop every cached view of a layout whose FILES were just replaced
-    * in place (compaction, store-format migration) — shared by
-    * [[compactPartitions]] and
-    * [[graft.operators.AnnIndex.migrateLshStoreV2]].
+    * in place by [[compactPartitions]].
     * refreshByPath recaches DATASETS only; the process-wide shared
     * FileStatusCache still holds the replaced dirs' listings, and a
     * later read of the layout would chase deleted part files.

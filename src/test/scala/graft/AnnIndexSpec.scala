@@ -721,24 +721,27 @@ class AnnIndexSpec extends SparkSpec {
 
   test("assignTag folds the codebook bytes: a same-k retrain re-keys tag-keyed cards") {
     // r20 DevSeedLaw finding: the k-only tag served the first codebook's
-    // ann_recall card to every later same-k codebook in the session. A
-    // seed-mode flip retrains (different centroids, same k) — the tag
-    // must differ so SessionCache artifacts keyed by it re-derive.
+    // ann_recall card to every later same-k codebook in the session. Two
+    // same-k codebooks with different centroids must tag differently so
+    // SessionCache artifacts keyed by it re-derive.
     import spark.implicits._
     val dir = Files.createTempDirectory("ann_tag").toString
     val rnd = new scala.util.Random(53)
     (0 to 300).map(i => (i.toLong, Seq.fill(16)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
     val ver = AnnIndex.corpusVersion(spark, dir)
-    def tagUnder(mode: String): String = {
-      spark.conf.set("spark.graft.ann.seed", mode)
-      try AnnIndex.assignTag(spark, dir, ver)
-      finally spark.conf.unset("spark.graft.ann.seed")
+    def codebook(seed: Int): Seq[Array[Double]] = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(17)(Array.fill(16)(r.nextGaussian()))
     }
-    val th = tagUnder("hash"); val tp = tagUnder("plusplus")
-    assert(th != tp, s"same-k retrain must re-key the tag: $th == $tp")
-    // and the tag is stable for the SAME codebook (memoized digest)
-    assert(tagUnder("hash") == th)
+    val (cbA, cbB) = (codebook(53), codebook(54))
+    val ta = AnnIndex.tagOf(spark, cbA); val tb = AnnIndex.tagOf(spark, cbB)
+    assert(ta.contains("-k17-") && tb.contains("-k17-"), s"same k: $ta, $tb")
+    assert(ta != tb, s"same-k retrain must re-key the tag: $ta == $tb")
+    // and the tag is stable for the SAME codebook bytes (a fresh copy,
+    // not just the memoized digest of one object)
+    assert(AnnIndex.tagOf(spark, cbA.map(_.clone())) == ta)
+    assert(AnnIndex.tagOf(spark, cbA) == ta)
     // the sibling staleness hole: pivot GROUPS must also re-key on a
     // same-k codebook change — under the old version|k key the second
     // call returned the first codebook's groups verbatim
@@ -1101,14 +1104,14 @@ class AnnIndexSpec extends SparkSpec {
     }
   }
 
-  test("a pre-v2 layout (same geometry, old dir grain) migrates in place at append") {
+  test("a pre-v2 layout (same geometry, old dir grain) is refused at append: rebuild") {
     import spark.implicits._
     // a v2 stream appending (band_id, band_grp) dirs into a v1
     // (band_id, band_key) layout passes the GEOMETRY equality check
     // (grpShift derives from bandBits) and would leave a mixed partition
-    // tree whose reads die on a partition-column conflict. r17 refused
-    // here; since r18 the guard MIGRATES the layout to the group-dir
-    // format once (staged, marker re-stamped last) and the assert passes
+    // tree whose reads die on a partition-column conflict. The in-place
+    // migration is retired: the guard refuses with a rebuild message and
+    // leaves every v1 file as it was
     val out = Files.createTempDirectory("lsh_v1_marker").toString
     val g = AnnIndex.LshFloorGeom
     // physical v1 grain: band_key as a partition DIRECTORY
@@ -1129,28 +1132,27 @@ class AnnIndexSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("migrat"),
       s"must point at the migration remedy, got: ${e.getMessage}")
-    // the append-path guard migrates and passes
-    AnnIndex.assertLshGeomMarker(spark, out, g)
-    assert(AnnIndex.readLshMarkerFormat(spark, out)
-      .contains(AnnIndex.LshStoreFormat))
-    val dirs = new java.io.File(out).listFiles()
-      .filter(_.isDirectory).map(_.getName)
-    assert(dirs.forall(!_.startsWith("_graft_lsh_migrate_staging")),
-      "staging dir must be cleaned up")
-    for (band <- new java.io.File(out).listFiles()
-        if band.isDirectory && band.getName.startsWith("band_id=")) {
-      val subs = band.listFiles().filter(_.isDirectory).map(_.getName)
-      assert(subs.forall(_.startsWith("band_grp=")),
-        s"post-migration grain must be band_grp only, got: ${subs.toSeq}")
+    def files(): Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val root = Paths.get(out)
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString ->
+          (Files.size(f), Files.getLastModifiedTime(f).toMillis)).toMap
+      finally walk.close()
     }
-    // every row survived, at the group-dir grain with in-file band_key
-    val got = spark.read
-      .schema("vec_id BIGINT, band_key BIGINT, band_id INT, band_grp INT")
-      .parquet(out).select("vec_id", "band_id", "band_key")
+    val before = files()
+    val refused = intercept[IllegalStateException] {
+      AnnIndex.assertLshGeomMarker(spark, out, g)
+    }
+    assert(refused.getMessage.contains("rebuild") && refused.getMessage.contains(out),
+      s"must name the layout and the rebuild remedy, got: ${refused.getMessage}")
+    assert(files() == before, "a refused append must leave the v1 layout untouched")
+    assert(AnnIndex.readLshMarkerFormat(spark, out).contains("v1"))
+    val got = spark.read.parquet(out)
+      .select(col("vec_id"), col("band_id").cast("int"), col("band_key").cast("bigint"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    assert(got == expect, "migration must preserve every (vec, band, key) row")
-    // idempotent: a second assert is a no-op pass
-    AnnIndex.assertLshGeomMarker(spark, out, g)
+    assert(got == expect, "every v1 (vec, band, key) row stays readable")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 }

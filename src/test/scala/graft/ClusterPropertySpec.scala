@@ -93,14 +93,34 @@ class ClusterPropertySpec extends SparkSpec {
     assert(iters <= 12, s"expected O(log 256) ≈ 8 rounds, took $iters")
   }
 
-  test("spark.graft.cc=star yields identical clusters on the real LSH edge graph") {
-    val viaPropagate = Dedup.dedupClusters(spark, sf).collect().toSeq
-    spark.conf.set("spark.graft.cc", "star")
-    try {
-      val viaStar = Dedup.dedupClusters(spark, sf).collect().toSeq
-      assert(viaStar == viaPropagate,
-        "both component engines must produce the same cluster reps and sizes")
-    } finally spark.conf.unset("spark.graft.cc")
+  test("starLabels == propagateLabels on the real LSH edge graph") {
+    // both component engines, called directly on the near-dup edge set
+    // dedupClusters labels — same component min for every document
+    val fp = graft.sources.SessionCache.dirFingerprint(spark, sf)
+    val nodes = graft.sources.Tables.documents(spark, sf).select("doc_id")
+    val edges = Dedup.nearDupEdges(spark, sf, fp)
+    assert(!edges.isEmpty, "the fixture must carry near-dup edges")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaPropagate = labels(Dedup.propagateLabels(nodes, edges))
+    val viaStar = labels(Dedup.starLabels(nodes, edges))
+    assert(viaStar == viaPropagate,
+      "both component engines must produce the same labels")
+  }
+
+  test("a 40-hop chain is one cluster: unconverged propagation hands over to star") {
+    import spark.implicits._
+    // deeper than propagateLabels' 20-pass bound: propagation alone
+    // splits it (the engine nearDupLabels ran by default before), and the
+    // engine selection must finish it with star contraction
+    val nodes = (1L to 41L).toDF("doc_id")
+    val edges = (1L to 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val split = Dedup.propagateLabels(nodes, edges)
+      .collect().map(_.getLong(1)).distinct
+    assert(split.length > 1, "propagation alone must hit its bound on this chain")
+    val labels = Dedup.componentLabels(nodes, edges)
+      .collect().map(_.getLong(1)).distinct
+    assert(labels.sameElements(Array(1L)), s"expected one cluster, got ${labels.toSeq}")
   }
 
   test("a chain deeper than any fixed small iteration count resolves to one cluster") {

@@ -94,6 +94,27 @@ class ContractSpec extends SparkSpec {
       s"README lists mains that do not exist: ${(listed -- defined).toSeq.sorted}")
   }
 
+  test("every spark.graft.* conf the engine reads is a README conf row (and vice versa)") {
+    // the tuning surface is exactly what README documents: a knob cannot
+    // ship without a stated reason to set it, and a retired knob cannot
+    // keep its row
+    import scala.jdk.CollectionConverters._
+    val read = (p: java.nio.file.Path) => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val rows = "(?m)^\\| `(spark\\.graft\\.[A-Za-z0-9.]+)` \\|".r
+      .findAllMatchIn(read(java.nio.file.Paths.get("README.md"))).map(_.group(1)).toSet
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    // whole key literals only: a prefix ("spark.graft.") or an
+    // interpolated key never matches
+    val keys = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+      "\"(spark\\.graft\\.[A-Za-z0-9.]*[A-Za-z0-9])\"".r.findAllMatchIn(read(f)).map(_.group(1))
+    }.toSet finally walk.close()
+    assert(keys.nonEmpty)
+    assert((keys -- rows).isEmpty,
+      s"confs read with no README row: ${(keys -- rows).toSeq.sorted}")
+    assert((rows -- keys).isEmpty,
+      s"README rows for confs the code does not read: ${(rows -- keys).toSeq.sorted}")
+  }
+
   test("operators hold no cache maps of their own: derived values go through SessionCache.memo") {
     // operator-local caches each grew their own key encoding, supersession
     // drop, bound and build latch; one store keeps one discipline

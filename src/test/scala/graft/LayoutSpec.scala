@@ -138,29 +138,34 @@ class LayoutSpec extends SparkSpec {
     assert(!new java.io.File(s"$out/_spark_metadata").exists())
   }
 
-  test("a legacy parquet ledger is still honored; markers bound the ledger size") {
+  test("a legacy parquet ledger is refused") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_lay_legacy").toString
     val ledger = s"$root/.ledger"
     val out = s"$root/layout"
     val batch = Seq((1L, 0, 3L)).toDF("vec_id", "band_id", "band_key")
-    // a ledger written by the pre-marker scheme: parquet batch_id rows,
-    // including one (0) far below 5000-1024 — the parquet ledger honored
-    // arbitrarily old ids, so the backfill must too, not just a horizon
+    // a ledger written by the pre-marker scheme: parquet batch_id rows.
+    // Its ids are invisible to the marker probe, so batch 0 would be
+    // re-appended — the sink must refuse instead, before writing anything
     Seq(0L, 5000L).toDF("batch_id").write.parquet(ledger)
-    // batch 0 must be recognized as committed through the legacy fallback
-    assert(!Layout.appendPartitionedIdempotent(
-      batch, 0L, out, ledger, Seq("band_id", "band_key")))
-    // migration is ONE-TIME: the legacy ids were backfilled as markers and
-    // the _migrated sentinel retires the parquet probe — deleting the
-    // legacy part files must not change any answer (nothing reads them)
-    assert(new java.io.File(ledger).listFiles().map(_.getName).contains("_migrated"))
-    new java.io.File(ledger).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .foreach(f => assert(f.delete()))
-    assert(!Layout.appendPartitionedIdempotent(
-      batch, 0L, out, ledger, Seq("band_id", "band_key")),
-      "batch 0 must stay committed via its backfilled marker, no parquet read")
+    val ledgerFiles = new java.io.File(ledger).listFiles().map(_.getName).toSet
+    val e = intercept[IllegalStateException] {
+      Layout.appendPartitionedIdempotent(
+        batch, 0L, out, ledger, Seq("band_id", "band_key"))
+    }
+    assert(e.getMessage.contains(ledger) && e.getMessage.contains("Rebuild"),
+      s"must name the ledger and the rebuild remedy, got: ${e.getMessage}")
+    assert(!new java.io.File(out).exists(), "a refused batch must not be appended")
+    assert(new java.io.File(ledger).listFiles().map(_.getName).toSet == ledgerFiles,
+      "a refused ledger must be left as it was")
+  }
+
+  test("markers bound the ledger size") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_lay_markers").toString
+    val ledger = s"$root/.ledger"
+    val out = s"$root/layout"
+    val batch = Seq((1L, 0, 3L)).toDF("vec_id", "band_id", "band_key")
     // new commits write markers, and old markers are pruned at the 1024
     // boundary (replay never reaches back past the retention window)
     assert(Layout.appendPartitionedIdempotent(

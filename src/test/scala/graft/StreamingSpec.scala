@@ -775,15 +775,13 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("streamed append onto a pre-v2 (dir-per-bucket) layout migrates and lands") {
+  test("streamed append onto a pre-v2 layout is refused untouched") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.AnnIndex
-    // the r17 format guard correctly REFUSED a streamed append into a v1
-    // dir-per-bucket layout, but the only remedy was an operator deleting
-    // the store; r18 wires migration into the guard — one in-place
-    // rebuild to the group-dir grain, then the append proceeds, no manual
-    // step (r17 verdict #4)
+    // a v1 dir-per-bucket layout is a store no current process writes:
+    // the format guard refuses the streamed append with a rebuild message
+    // instead of mixing partition grains, and touches no v1 file
     val g = AnnIndex.LshFloorGeom
     val out = java.nio.file.Files.createTempDirectory("lsh_v1_stream").toString
     val oldRows = Seq((5L, Seq(0.4, 0.1, -0.6, 0.2)))
@@ -794,38 +792,32 @@ class StreamingSpec extends SparkSpec {
     val os = fs.create(mp, true)
     os.write(s"${g.bands} ${g.bandBits} ${g.seed}".getBytes("UTF-8")) // v1 marker
     os.close()
+    def files(): Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(out)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString ->
+          (java.nio.file.Files.size(f),
+            java.nio.file.Files.getLastModifiedTime(f).toMillis)).toMap
+      finally walk.close()
+    }
+    val before = files()
     val mem = MemoryStream[(Long, Seq[Double])]
     val ckpt = java.nio.file.Files.createTempDirectory("lsh_v1_stream_c").toString
     val q = Streams.lshIngestSink(mem.toDF().toDF("vec_id", "v"), out, ckpt).start()
     try {
       mem.addData((6L, Seq(0.2, 0.7, 0.1, -0.4)))
-      q.processAllAvailable() // migrates, then appends — no exception
-      assert(AnnIndex.readLshMarkerFormat(spark, out)
-        .contains(AnnIndex.LshStoreFormat))
-      val bands = spark.read
-        .schema("vec_id BIGINT, band_key BIGINT, band_id INT, band_grp INT")
-        .parquet(out)
-      val ids = bands.select("vec_id").distinct()
-        .collect().map(_.getLong(0)).toSet
-      assert(ids == Set(5L, 6L),
-        "migrated rows and the streamed append must both be readable")
-      // pre-migration rows landed in the SAME buckets a v2 build computes
-      val expectOld = oldRows.toDF("vec_id", "v")
-        .transform(AnnIndex.bandify(_, g))
-        .select("vec_id", "band_id", "band_key")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      val gotOld = bands.where($"vec_id" === 5L)
-        .select("vec_id", "band_id", "band_key")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-      assert(gotOld == expectOld, "migration must preserve bucket keys")
-      // grain is uniformly band_grp — no mixed partition tree
-      for (band <- new java.io.File(out).listFiles()
-          if band.isDirectory && band.getName.startsWith("band_id=")) {
-        val subs = band.listFiles().filter(_.isDirectory).map(_.getName)
-        assert(subs.forall(_.startsWith("band_grp=")),
-          s"mixed grain after migration: ${subs.toSeq}")
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
       }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      assert(messages(e).exists(m => m.contains("rebuild") && m.contains(out)),
+        s"the v1 layout must be refused with a rebuild message, got: ${messages(e)}")
     } finally q.stop()
+    assert(files() == before, "a refused append must leave the v1 layout untouched")
+    assert(AnnIndex.readLshMarkerFormat(spark, out).contains("v1"))
   }
 
   test("batch-built LSH index carries the geometry marker") {
