@@ -34,6 +34,15 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the status listeners run with the UI off too, and by default keep
+      // 1,000 jobs, stages and SQL executions (plus 100k tasks per stage)
+      // — a long-lived session's heap grew ~95 KB per registry query until
+      // those caps. Nothing here reads old entries back (ShuffleAudit and
+      // the profilers use their own listeners), so keep a short tail.
+      .config("spark.ui.retainedJobs", "50")
+      .config("spark.ui.retainedStages", "50")
+      .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.ui.retainedExecutions", "50")
       // AQE on is the cluster posture (runtime re-plan, skew splitting);
       // SPARK_GRAFT_AQE=false exists to measure its fixed re-planning cost
       // on small inputs (see BASELINE.md)

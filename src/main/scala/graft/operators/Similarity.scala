@@ -61,8 +61,9 @@ object Similarity {
     * order-insensitive; per-label avg is a DECIMAL sum of rounded
     * per-vector ratios over an exact count. round(x/scale) at an exact
     * .5 is engine-ambiguous but measure-zero over real-valued floats.
-    * Scale: map-only over one corpus scan (no per-vector shuffle), one
-    * label-sized hash aggregate with map-side partials.
+    * Scale: map-only over one corpus scan (no per-vector shuffle) behind
+    * the adaptive [[Tables.spread]] — the per-element folds are the cost —
+    * then one label-sized hash aggregate with map-side partials.
     */
   def quantizeEmbed(spark: SparkSession, dir: String): DataFrame = {
     val v = col("v")
@@ -79,7 +80,7 @@ object Similarity {
     val errSq = dsum(zip_with(v, transform(v, x => round(x / scale) * scale),
       (x, q) => pow(x - q, 2)))
     val normSq = dsum(transform(v, x => pow(x, 2)))
-    Tables.embeddings(spark, dir)
+    Tables.spread(Tables.embeddings(spark, dir).select("label", "embedding"))
       .select(col("label"), col("embedding").cast("array<double>").as("v"))
       .withColumn("scale",
         array_max(transform(col("v"), x => abs(x))) / lit(127.0))
@@ -112,15 +113,16 @@ object Similarity {
     * error is a function of the trained codebooks (the q_sim_ann_ivf
     * class). Determinism: per-vector error folds in subspace order;
     * per-label avg routes rounded per-vector values through DECIMAL.
-    * Scale: map-only corpus scan + label-sized hash agg, zero shuffle
-    * beyond the card partials — the quantizeEmbed discipline.
+    * Scale: map-only corpus scan behind the adaptive [[Tables.spread]] +
+    * label-sized hash agg, no shuffle beyond the spread and the card
+    * partials — the quantizeEmbed discipline.
     */
   def quantizePq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ver = AnnIndex.corpusVersion(spark, dir)
     val cb = Seq(Tuple1(
       PqIndex.codebooks(spark, dir, ver).toSeq)).toDF("cbs")
-    Tables.embeddings(spark, dir)
+    Tables.spread(Tables.embeddings(spark, dir).select("label", "embedding"))
       .select(col("label"), col("embedding").cast("array<double>").as("v"))
       .crossJoin(broadcast(cb)) // 1-row codebook: zero fan
       .select(col("label"),
@@ -150,14 +152,14 @@ object Similarity {
     *
     * Determinism: per-dim sums of x and x² route through DECIMAL(28,12)
     * (order-insensitive); mean/std/frac are a handful of IEEE double ops
-    * on those exact sums, rounded to 6. Scale: one corpus scan,
-    * posexplode to (dim, x) pairs (map-side), one 64-group hash
-    * aggregate with map-side partials — shuffle carries 64×partials,
-    * never the corpus.
+    * on those exact sums, rounded to 6. Scale: one corpus scan behind
+    * the adaptive [[Tables.spread]], posexplode to (dim, x) pairs
+    * (map-side), one 64-group hash aggregate with map-side partials —
+    * beyond the spread, the shuffle carries 64×partials, never the corpus.
     */
   def embedDimStats(spark: SparkSession, dir: String): DataFrame = {
     val dec = "decimal(28,12)"
-    Tables.embeddings(spark, dir)
+    Tables.spread(Tables.embeddings(spark, dir).select("embedding"))
       .select(posexplode(col("embedding").cast("array<double>")).as(Seq("pos", "x")))
       .select((col("pos") + 1).cast("bigint").as("dim"), col("x"))
       .groupBy("dim")

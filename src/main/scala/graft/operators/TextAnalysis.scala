@@ -76,15 +76,15 @@ object TextAnalysis {
   /** F9 — per-document token counting: whitespace tokens and a BPE-ish
     * regex tokenization (letter runs / digit runs / single other chars —
     * the pre-tokenizer split most BPE vocabularies assume).
-    * Scale: pure map work over the scan; no shuffle before the output sort.
+    * Scale: pure map work over the scan, ordered by
+    * [[Tables.sortedByDocId]] (a single-split scan is range-sorted first
+    * and the counting runs on all cores).
     */
   def textTokens(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(
-        col("doc_id"),
-        size(words(col("text"))).as("n_ws_tokens"),
-        regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).as("n_bpe_tokens"))
-      .orderBy("doc_id")
+    Tables.sortedByDocId(Tables.documents(spark, dir))(_.select(
+      col("doc_id"),
+      size(words(col("text"))).as("n_ws_tokens"),
+      regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).as("n_bpe_tokens")))
 
   /** F9 — quality scoring: unique-token ratio, average word length, length
     * saturation, folded into one [0,1] score. The formula is evaluated with
@@ -94,7 +94,7 @@ object TextAnalysis {
     * (HALF_UP on the shortest decimal repr) and DuckDB (binary value)
     * disagree — so all doubles are truncated via floor(x·10⁶)/10⁶, which has
     * no tie-breaking semantics at all.
-    * Scale: map-only.
+    * Scale: map-only, ordered by [[Tables.sortedByDocId]].
     */
   def textQuality(spark: SparkSession, dir: String): DataFrame = {
     def trunc6(c: Column): Column = floor(c * 1e6) / 1e6
@@ -106,14 +106,12 @@ object TextAnalysis {
       uniqRatio * 0.5 +
         least(avgWordLen / 10.0, lit(1.0)) * 0.3 +
         least(nWords / 100.0, lit(1.0)) * 0.2
-    Tables.documents(spark, dir)
-      .select(
-        col("doc_id"),
-        size(w).as("n_words"),
-        trunc6(uniqRatio).as("uniq_ratio"),
-        trunc6(avgWordLen).as("avg_word_len"),
-        trunc6(score).as("quality_score"))
-      .orderBy("doc_id")
+    Tables.sortedByDocId(Tables.documents(spark, dir))(_.select(
+      col("doc_id"),
+      size(w).as("n_words"),
+      trunc6(uniqRatio).as("uniq_ratio"),
+      trunc6(avgWordLen).as("avg_word_len"),
+      trunc6(score).as("quality_score")))
   }
 
   /** F9 — n-gram language ID, self-trained: build per-language char-bigram
@@ -538,9 +536,12 @@ object TextAnalysis {
     * inside a lambda body, and Spark re-evaluates lambda-body subtrees per
     * element (no CSE inside higher-order functions) — O(len²) hashing per
     * document. Bottom-k is one sort over the array evaluated once per row
-    * and has the same near-dup-index semantics.
-    * Scale: map-only; fingerprints (8 bytes + size) are what a 100 TB
-    * near-dup index stores instead of text.
+    * and has the same near-dup-index semantics; the gram walk under it is
+    * linear too (`ngram_hashes` slides a byte window, see [[graft.plans.NGramHashes]]).
+    * Scale: map-only; on a single-split scan [[Tables.sortedByDocId]]
+    * adds one range exchange of the raw rows between local cores before
+    * the hashing. Fingerprints (8 bytes + size) are what a 100 TB near-dup
+    * index stores instead of text.
     */
   def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
     // char-5-gram hashes via the native expression (sorted + distinct by
@@ -550,12 +551,10 @@ object TextAnalysis {
     // over the same UTF-8 bytes; verified on the corpus), without the
     // per-element interpreted lambda boxing
     val fp = slice(expr("ngram_hashes(text, 5, 'char_distinct')"), 1, 32)
-    Tables.documents(spark, dir)
-      .select(
-        col("doc_id"),
-        size(fp).as("fp_size"),
-        xxhash64(fp).as("fp_digest"))
-      .orderBy("doc_id")
+    Tables.sortedByDocId(Tables.documents(spark, dir))(_.select(
+      col("doc_id"),
+      size(fp).as("fp_size"),
+      xxhash64(fp).as("fp_digest")))
   }
 
   // PII patterns shared by the operator and its oracle SQL (RE2-safe
@@ -578,25 +577,26 @@ object TextAnalysis {
     * counting every pattern on the raw text would tally digit runs and IPs
     * inside matched emails that are never separately replaced, and the
     * counts are documented as a compliance report of redactions performed.
+    * `df` must be scan-rooted ([[Tables.sortedByDocId]]'s contract).
     */
   def redact(df: DataFrame): DataFrame = {
     val afterEmail = regexp_replace(col("text"), lit(EmailRe), lit("<EMAIL>"))
     val afterIp = regexp_replace(afterEmail, lit(Ipv4Re), lit("<IP>"))
     val clean = regexp_replace(afterIp, lit(LongNumRe), lit("<NUM>"))
-    df.select(
+    Tables.sortedByDocId(df)(_.select(
       col("doc_id"),
       regexp_count(col("text"), lit(EmailRe)).as("n_emails"),
       regexp_count(afterEmail, lit(Ipv4Re)).as("n_ips"),
       regexp_count(afterIp, lit(LongNumRe)).as("n_longnums"),
-      sha2(clean.cast("binary"), 256).as("clean_sha"))
-      .orderBy("doc_id")
+      sha2(clean.cast("binary"), 256).as("clean_sha")))
   }
 
   /** F9 — PII redaction over the corpus: the scrub pass every
     * training-data pipeline runs before anything is tokenized.
-    * Scale: map-only — three codegen'd regexes per row, no shuffle before
-    * the output sort; at 100 TB this pass writes the scrubbed corpus and
-    * the counts feed a compliance report.
+    * Scale: map-only — three codegen'd regexes per row, run on all cores
+    * after [[Tables.sortedByDocId]]'s range sort of a single-split scan;
+    * at 100 TB this pass writes the scrubbed corpus and the counts feed a
+    * compliance report.
     */
   def textRedact(spark: SparkSession, dir: String): DataFrame =
     redact(Tables.documents(spark, dir))
@@ -610,13 +610,15 @@ object TextAnalysis {
     * need scrubbing before tokenization — per-source, not per-doc,
     * because the decision (drop / scrub / pass) is made per source.
     * Scale: map-only regex counting over one corpus scan (the same three
-    * codegen'd regexes as [[textRedact]]), then a sources-sized hash agg
-    * with map-side partials. Determinism: exact longs; one rounded ratio.
+    * codegen'd regexes as [[textRedact]]) behind the adaptive
+    * [[Tables.spread]] — the regexes are the cost — then a sources-sized
+    * hash agg with map-side partials. Determinism: exact longs; one
+    * rounded ratio.
     */
   def piiCard(spark: SparkSession, dir: String): DataFrame = {
     val afterEmail = regexp_replace(col("text"), lit(EmailRe), lit("<EMAIL>"))
     val afterIp = regexp_replace(afterEmail, lit(Ipv4Re), lit("<IP>"))
-    Tables.documents(spark, dir)
+    Tables.spread(Tables.documents(spark, dir).select("source", "text"))
       .select(col("source"),
         regexp_count(col("text"), lit(EmailRe)).as("ne"),
         regexp_count(afterEmail, lit(Ipv4Re)).as("ni"),
@@ -1021,7 +1023,7 @@ object TextAnalysis {
     * both engines.
     * Scale: map-only over the scan — the gram array lives inside one row's
     * evaluation (never exploded, never shuffled); output is one row per
-    * doc with no shuffle before the output sort.
+    * doc, ordered by [[Tables.sortedByDocId]].
     */
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
     def trunc6(c: Column): Column = floor(c * 1e6) / 1e6
@@ -1031,19 +1033,18 @@ object TextAnalysis {
       (a, b) => concat(a, lit(" "), b))
     val grams = zip_with(g12, slice(w, lit(3), n3),
       (ab, c) => concat(ab, lit(" "), c))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), grams.as("grams"))
-      .select(
-        col("doc_id"), col("lang"),
-        size(col("grams")).as("n_grams"),
-        size(array_distinct(col("grams"))).as("n_distinct"))
-      .withColumn("dup_ratio",
-        when(col("n_grams") > 0,
-          trunc6(lit(1.0) -
-            col("n_distinct").cast("double") / col("n_grams")))
-          .otherwise(lit(0.0)))
-      .withColumn("flagged", col("dup_ratio") > 0.1)
-      .orderBy("doc_id")
+    Tables.sortedByDocId(Tables.documents(spark, dir))(
+      _.select(col("doc_id"), col("lang"), grams.as("grams"))
+        .select(
+          col("doc_id"), col("lang"),
+          size(col("grams")).as("n_grams"),
+          size(array_distinct(col("grams"))).as("n_distinct"))
+        .withColumn("dup_ratio",
+          when(col("n_grams") > 0,
+            trunc6(lit(1.0) -
+              col("n_distinct").cast("double") / col("n_grams")))
+            .otherwise(lit(0.0)))
+        .withColumn("flagged", col("dup_ratio") > 0.1))
   }
 
   /** The (passage-hash, source, doc_id, n_occ) table behind

@@ -92,6 +92,44 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("ngram_hashes char modes equal the substringSQL walk on multi-byte text") {
+    // the kernel slides a byte window; the reference hashes
+    // substringSQL(i + 1, n) per gram, as the kernel once did. ASCII plus
+    // 2-, 3- and 4-byte characters, empty texts and texts shorter than n
+    val pool = Gen.oneOf("a", "b", " ", "Z", "7", "é", "ß", "漢", "字", "😀", "🚀")
+    val genCase = for {
+      len <- Gen.frequency(1 -> Gen.const(0), 2 -> Gen.chooseNum(1, 5), 5 -> Gen.chooseNum(6, 40))
+      chars <- Gen.listOfN(len, pool)
+      n <- Gen.oneOf(2, 3, 5)
+    } yield (chars.mkString, n)
+    def hash(s: UTF8String): Long =
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+    def reference(t: UTF8String, n: Int): Array[Long] =
+      Array.tabulate(math.max(t.numChars - n + 1, 1))(i => hash(t.substringSQL(i + 1, n)))
+    def run(mode: String, t: UTF8String, n: Int): ArrayData =
+      NGramHashes(BoundReference(0, StringType, nullable = false), n, mode)
+        .nullSafeEval(t).asInstanceOf[ArrayData]
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(1000).withInitialSeed(Seed(42L)),
+      Prop.forAll(genCase) { case (s, n) =>
+        val t = UTF8String.fromString(s)
+        val ref = reference(t, n)
+        val counts = run("char_counts", t, n)
+        val gotCounts = (0 until counts.numElements()).map { i =>
+          val r = counts.getStruct(i, 2)
+          r.getLong(0) -> r.getLong(1)
+        }
+        val wantCounts = ref.groupBy(identity).toSeq
+          .map { case (h, hs) => h -> hs.length.toLong }.sortBy(_._1)
+        (run("char", t, n).toLongArray().sameElements(ref) :| "char") &&
+          (run("char_distinct", t, n).toLongArray().sameElements(ref.distinct.sorted)
+            :| "char_distinct") &&
+          (gotCounts == wantCounts) :| "char_counts"
+      })
+    assert(res.passed, s"char-window = substringSQL: $res")
+  }
+
   test("ngram_hashes word_counts matches a reference token-count map") {
     val genText = Gen.nonEmptyListOf(
       Gen.oneOf("a", "bb", "ccc", "a", "dd")).map(_.mkString(" "))

@@ -1,6 +1,12 @@
 package graft
 
+import graft.operators.TextAnalysis
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -59,5 +65,68 @@ class SpreadSpec extends SparkSpec {
     // the allowed shape still passes: scan + filter + projection
     assert(Tables.spread(
       docs.where(col("doc_id") > 0).select("doc_id", "lang")) ne null)
+    offenders.foreach { bad =>
+      val e = intercept[IllegalArgumentException](
+        Tables.sortedByDocId(bad)(identity))
+      assert(e.getMessage.contains("scan-rooted"), e.getMessage)
+    }
+  }
+
+  // the per-document text outputs on Tables.sortedByDocId, each with the
+  // expression its projection exists for
+  private val perDoc: Seq[(String, String => DataFrame, String)] = Seq(
+    ("q_text_fingerprint", TextAnalysis.textFingerprint(spark, _), "ngram_hashes"),
+    ("q_text_redact", TextAnalysis.textRedact(spark, _), "regexp_replace"),
+    ("q_text_repetition", TextAnalysis.textRepetition(spark, _), "zip_with"),
+    ("q_text_tokens", TextAnalysis.textTokens(spark, _), "regexp_extract_all"),
+    ("q_text_quality", TextAnalysis.textQuality(spark, _), "array_distinct"))
+
+  private def physical(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+  private def rangeExchanges(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+    case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+  }
+  private def evaluates(p: SparkPlan, fn: String): Boolean =
+    p.exists(_.expressions.exists(_.exists(_.prettyName == fn)))
+
+  test("sortedByDocId: single-split and pre-split corpora give the same rows in the same order") {
+    val par = spark.sparkContext.defaultParallelism
+    assume(Tables.documents(spark, sf).rdd.getNumPartitions < par)
+    val dir = tmp("graft_presplit_docs")
+    Tables.documents(spark, sf).repartition(par + 2)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assume(Tables.documents(spark, dir).rdd.getNumPartitions >= par)
+    for ((name, q, fn) <- perDoc) {
+      val single = q(sf)
+      val split = q(dir)
+      // the pre-split corpus projects first: its one range exchange (the
+      // output orderBy) sits above the expensive expression
+      val sp = physical(split)
+      assert(rangeExchanges(sp).exists(evaluates(_, fn)),
+        s"$name: a pre-split corpus must project before the sort:\n$sp")
+      val a = single.collect().toSeq
+      assert(a.nonEmpty, name)
+      assert(a == split.collect().toSeq, s"$name: rows or order differ between regimes")
+      assert(a.map(_.getAs[Long]("doc_id")) == a.map(_.getAs[Long]("doc_id")).sorted, name)
+    }
+  }
+
+  test("sortedByDocId: a single-split scan range-sorts the raw rows, then projects") {
+    // the projection must sit ABOVE the range exchange: below it, the
+    // exchange's bounds sampler evaluates it a second time and the map
+    // side runs it in the scan's one task
+    assume(Tables.documents(spark, sf).rdd.getNumPartitions <
+      spark.sparkContext.defaultParallelism)
+    for ((name, q, fn) <- perDoc) {
+      val p = physical(q(sf))
+      val ranges = rangeExchanges(p)
+      assert(ranges.size == 1, s"$name: expected one range exchange:\n$p")
+      assert(evaluates(p, fn), s"$name: $fn missing from the plan:\n$p")
+      assert(!evaluates(ranges.head, fn),
+        s"$name: $fn runs below the range exchange:\n$p")
+    }
   }
 }
