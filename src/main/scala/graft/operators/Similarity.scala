@@ -113,16 +113,15 @@ object Similarity {
     * error is a function of the trained codebooks (the q_sim_ann_ivf
     * class). Determinism: per-vector error folds in subspace order;
     * per-label avg routes rounded per-vector values through DECIMAL.
-    * Scale: map-only corpus scan behind the adaptive [[Tables.spread]] +
-    * label-sized hash agg, no shuffle beyond the spread and the card
-    * partials — the quantizeEmbed discipline.
+    * Scale: map-only corpus scan + label-sized hash agg, zero shuffle
+    * beyond the card partials — the quantizeEmbed discipline.
     */
   def quantizePq(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ver = AnnIndex.corpusVersion(spark, dir)
     val cb = Seq(Tuple1(
       PqIndex.codebooks(spark, dir, ver).toSeq)).toDF("cbs")
-    Tables.spread(Tables.embeddings(spark, dir).select("label", "embedding"))
+    Tables.embeddings(spark, dir)
       .select(col("label"), col("embedding").cast("array<double>").as("v"))
       .crossJoin(broadcast(cb)) // 1-row codebook: zero fan
       .select(col("label"),

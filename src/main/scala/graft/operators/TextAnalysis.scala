@@ -77,8 +77,8 @@ object TextAnalysis {
     * regex tokenization (letter runs / digit runs / single other chars —
     * the pre-tokenizer split most BPE vocabularies assume).
     * Scale: pure map work over the scan, ordered by
-    * [[Tables.sortedByDocId]] (a single-split scan is range-sorted first
-    * and the counting runs on all cores).
+    * [[Tables.sortedByDocId]] (the raw scan is range-sorted first, so
+    * the counting runs once per row on all cores).
     */
   def textTokens(spark: SparkSession, dir: String): DataFrame =
     Tables.sortedByDocId(Tables.documents(spark, dir))(_.select(
@@ -538,9 +538,8 @@ object TextAnalysis {
     * document. Bottom-k is one sort over the array evaluated once per row
     * and has the same near-dup-index semantics; the gram walk under it is
     * linear too (`ngram_hashes` slides a byte window, see [[graft.plans.NGramHashes]]).
-    * Scale: map-only; on a single-split scan [[Tables.sortedByDocId]]
-    * adds one range exchange of the raw rows between local cores before
-    * the hashing. Fingerprints (8 bytes + size) are what a 100 TB near-dup
+    * Scale: map-only, plus [[Tables.sortedByDocId]]'s one range exchange
+    * of the raw (doc_id, text) rows ahead of the hashing. Fingerprints (8 bytes + size) are what a 100 TB near-dup
     * index stores instead of text.
     */
   def textFingerprint(spark: SparkSession, dir: String): DataFrame = {
@@ -594,7 +593,7 @@ object TextAnalysis {
   /** F9 — PII redaction over the corpus: the scrub pass every
     * training-data pipeline runs before anything is tokenized.
     * Scale: map-only — three codegen'd regexes per row, run on all cores
-    * after [[Tables.sortedByDocId]]'s range sort of a single-split scan;
+    * after [[Tables.sortedByDocId]]'s range sort of the raw scan;
     * at 100 TB this pass writes the scrubbed corpus and the counts feed a
     * compliance report.
     */

@@ -71,14 +71,12 @@ object Tables {
       spark: SparkSession, dir: String, name: String, fp: String): Long =
     SessionCache.memo(spark, dir, fp, s"count|$name")(apply(spark, dir, name).count())
 
-  /** The one adaptivity rule behind [[spread]] and [[sortedByDocId]]:
-    * does this scan arrive in fewer partitions than cores? The
-    * single-file local testdata gives Spark one split, so compute-heavy
-    * map stages (shingling, simhash, gram hashing, codebook assignment)
-    * would run single-threaded; a real multi-thousand-file corpus already
-    * scans in parallel, and re-shuffling it would re-move the whole
-    * corpus for parallelism it has. The partition probe plans the
-    * subtree (no execution).
+  /** Partitions a scan-rooted frame arrives in — the one probe behind
+    * [[spread]] and [[sortedByDocId]]. The single-file local testdata
+    * gives Spark one split, so compute-heavy map stages (shingling,
+    * simhash, gram hashing, codebook assignment) would run
+    * single-threaded; a real multi-thousand-file corpus already scans in
+    * parallel. The probe plans the subtree (no execution).
     *
     * CONTRACT: call only on scan-rooted frames (scan + filters/projections)
     * — under AQE, probing `.rdd` on a subtree containing exchanges would
@@ -89,7 +87,7 @@ object Tables {
     * time instead of silently executing query stages (the walk is
     * O(plan nodes), free next to the probe itself).
     */
-  private def underParallelized(df: DataFrame): Boolean = {
+  private def scanPartitions(df: DataFrame): Int = {
     df.queryExecution.analyzed.foreach {
       case n @ (_: org.apache.spark.sql.catalyst.plans.logical.Repartition |
                 _: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression |
@@ -106,39 +104,38 @@ object Tables {
             "probe would materialize this subtree's query stages under AQE")
       case _ => ()
     }
-    df.rdd.getNumPartitions < df.sparkSession.sparkContext.defaultParallelism
+    df.rdd.getNumPartitions
   }
 
   /** Scan-spread, made adaptive: round-robin repartition to cores ONLY
-    * when the scan is [[underParallelized]] — an unconditional
-    * `repartition(N)` is never a no-op. For map stages whose cost is the
-    * per-row work (aggregate cards, explodes); same contract.
+    * when the scan arrives in fewer partitions than cores — an
+    * unconditional `repartition(N)` is never a no-op, and re-shuffling a
+    * pre-split corpus would re-move it for parallelism it has. For map
+    * stages whose cost is the per-row work (aggregate cards, explodes);
+    * [[scanPartitions]]' contract.
     */
-  def spread(df: DataFrame): DataFrame =
-    if (underParallelized(df))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    else df
+  def spread(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (scanPartitions(df) < cores) df.repartition(cores) else df
+  }
 
   /** Per-document output in `doc_id` order: `project(scan)` totally
     * ordered by `doc_id`, with the projection evaluated once per row on
     * all cores. `project` must be row-wise (select / withColumn / where —
     * no shuffle), so it keeps its input's order.
     *
-    * An [[underParallelized]] scan is range-partitioned on the raw
-    * `doc_id` and sorted within each partition, THEN projected: the
-    * exchange moves the pruned scan rows once and its bounds sampler reads
-    * only the scan. (`spread` + `orderBy` would evaluate the projection
-    * twice — the sampling job re-runs it to find the bounds — and a plain
-    * `orderBy` runs it in the scan's one task.) A scan that already
-    * arrives in parallel keeps project → `orderBy`, so only the small
-    * projected rows shuffle. Same contract as [[spread]].
+    * The raw scan is range-partitioned on `doc_id` into max(scan
+    * partitions, cores) parts and sorted within each, THEN projected: the
+    * exchange moves the pruned scan columns once and its bounds sampler
+    * reads only the scan. (`project` → `orderBy` would evaluate the
+    * projection twice — the sampling job re-runs it to find the bounds —
+    * and, on a single-split scan, in one task.) [[scanPartitions]]'
+    * contract.
     */
-  def sortedByDocId(scan: DataFrame)(project: DataFrame => DataFrame): DataFrame =
-    if (underParallelized(scan))
-      project(scan
-        .repartitionByRange(scan.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-        .sortWithinPartitions("doc_id"))
-    else project(scan).orderBy("doc_id")
+  def sortedByDocId(scan: DataFrame)(project: DataFrame => DataFrame): DataFrame = {
+    val parts = math.max(scanPartitions(scan), scan.sparkSession.sparkContext.defaultParallelism)
+    project(scan.repartitionByRange(parts, col("doc_id")).sortWithinPartitions("doc_id"))
+  }
 
   /** Cast every TIMESTAMP_NTZ column to session-zoned `TimestampType` at
     * the catalog boundary. The testdata generator is not stable about the

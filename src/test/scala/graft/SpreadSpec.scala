@@ -92,41 +92,38 @@ class SpreadSpec extends SparkSpec {
   private def evaluates(p: SparkPlan, fn: String): Boolean =
     p.exists(_.expressions.exists(_.exists(_.prettyName == fn)))
 
+  // sf0.001 documents rewritten as cores+2 files, so the scan arrives
+  // pre-split (the other regime from the one-file local testdata)
+  private lazy val presplitDocs: String = {
+    val dir = tmp("graft_presplit_docs")
+    Tables.documents(spark, sf).repartition(spark.sparkContext.defaultParallelism + 2)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   test("sortedByDocId: single-split and pre-split corpora give the same rows in the same order") {
     val par = spark.sparkContext.defaultParallelism
     assume(Tables.documents(spark, sf).rdd.getNumPartitions < par)
-    val dir = tmp("graft_presplit_docs")
-    Tables.documents(spark, sf).repartition(par + 2)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    assume(Tables.documents(spark, dir).rdd.getNumPartitions >= par)
-    for ((name, q, fn) <- perDoc) {
-      val single = q(sf)
-      val split = q(dir)
-      // the pre-split corpus projects first: its one range exchange (the
-      // output orderBy) sits above the expensive expression
-      val sp = physical(split)
-      assert(rangeExchanges(sp).exists(evaluates(_, fn)),
-        s"$name: a pre-split corpus must project before the sort:\n$sp")
-      val a = single.collect().toSeq
+    assume(Tables.documents(spark, presplitDocs).rdd.getNumPartitions >= par)
+    for ((name, q, _) <- perDoc) {
+      val a = q(sf).collect().toSeq
       assert(a.nonEmpty, name)
-      assert(a == split.collect().toSeq, s"$name: rows or order differ between regimes")
+      assert(a == q(presplitDocs).collect().toSeq, s"$name: rows or order differ between regimes")
       assert(a.map(_.getAs[Long]("doc_id")) == a.map(_.getAs[Long]("doc_id")).sorted, name)
     }
   }
 
-  test("sortedByDocId: a single-split scan range-sorts the raw rows, then projects") {
+  test("sortedByDocId: the raw scan is range-sorted, then projected, in both regimes") {
     // the projection must sit ABOVE the range exchange: below it, the
-    // exchange's bounds sampler evaluates it a second time and the map
-    // side runs it in the scan's one task
-    assume(Tables.documents(spark, sf).rdd.getNumPartitions <
-      spark.sparkContext.defaultParallelism)
-    for ((name, q, fn) <- perDoc) {
-      val p = physical(q(sf))
+    // exchange's bounds sampler evaluates it a second time (and on a
+    // single-split scan the map side runs it in one task)
+    for (dir <- Seq(sf, presplitDocs); (name, q, fn) <- perDoc) {
+      val p = physical(q(dir))
       val ranges = rangeExchanges(p)
-      assert(ranges.size == 1, s"$name: expected one range exchange:\n$p")
-      assert(evaluates(p, fn), s"$name: $fn missing from the plan:\n$p")
+      assert(ranges.size == 1, s"$name@$dir: expected one range exchange:\n$p")
+      assert(evaluates(p, fn), s"$name@$dir: $fn missing from the plan:\n$p")
       assert(!evaluates(ranges.head, fn),
-        s"$name: $fn runs below the range exchange:\n$p")
+        s"$name@$dir: $fn runs below the range exchange:\n$p")
     }
   }
 }
